@@ -655,9 +655,8 @@ def q_ivfpqr_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["qid"], r["rank"], r["id"], round(r["dist"], 6))
         for r in pqr2.search(sq, 5, nprobe=4, rerank="raw").collect()
     }
-    # r13: the distributed codes-rerank cogroup twin must return exactly
-    # the driver _search_pqr_codes rows (same ADC shortlist discipline,
-    # same refine decode, same re-ranked distances)
+    # the distributed codes-rerank cogroup must return exactly the
+    # driver-planned rows (both run the same PQRScorer)
     from faiss_spark.operators.ivf import pqr_search_preassigned
 
     bb_eq = {
@@ -684,7 +683,7 @@ def q_imi_search_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     every product cell is probed, so results equal brute-force L2 knn and
     the oracle is the exact-knn SQL. Tagged union over BOTH search modes
     (r13): mode='driver' = the driver-planned probe dict; mode='bigbatch'
-    = search_preassigned with the SAME product-grid `_probe` running
+    = search_preassigned with the index's own product-grid probe running
     executor-side (the queries-never-collect fallback path)."""
     from faiss_spark.operators.ivf import IMIIVFIndex, search_preassigned
 
@@ -695,13 +694,9 @@ def q_imi_search_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     drv = _round(idx.search(qs, K, nprobe=np_)).withColumn(
         "mode", F.lit("driver")
     )
-    bb = _round(
-        search_preassigned(
-            idx, qs, K, nprobe=np_,
-            assign_payload=idx.sub_centroids,
-            assign_fn=lambda p, Q: IMIIVFIndex(sub_centroids=p)._probe(Q, np_),
-        )
-    ).withColumn("mode", F.lit("bigbatch"))
+    bb = _round(search_preassigned(idx, qs, K, nprobe=np_)).withColumn(
+        "mode", F.lit("bigbatch")
+    )
     return drv.unionByName(bb)
 
 
@@ -715,24 +710,19 @@ def q_miq2_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force L2 knn — the oracle is the exact-knn SQL, the same
     ORACLE-EXACT regime as ★imi_search_exact. Tagged union (r13):
     driver-planned vs the search_preassigned fallback running the
-    MIQ2 truncated-grid `_probe` executor-side."""
+    MIQ2 truncated-grid probe executor-side."""
     from faiss_spark.operators.ivf import MIQ2IVFIndex, search_preassigned
 
     vecs = _emb(spark, sf_dir)
     idx = MIQ2IVFIndex.train(vecs, nbits=2, seed=42).add(vecs)
     qs = _queries_df(spark, sf_dir)
     np_ = idx.nlist
-    st = idx._probe_state()
     drv = _round(idx.search(qs, K, nprobe=np_)).withColumn(
         "mode", F.lit("driver")
     )
-    bb = _round(
-        search_preassigned(
-            idx, qs, K, nprobe=np_,
-            assign_payload=st,
-            assign_fn=lambda s, Q: MIQ2IVFIndex(**s)._probe(Q, np_),
-        )
-    ).withColumn("mode", F.lit("bigbatch"))
+    bb = _round(search_preassigned(idx, qs, K, nprobe=np_)).withColumn(
+        "mode", F.lit("bigbatch")
+    )
     return drv.unionByName(bb)
 
 
@@ -927,16 +917,11 @@ def q_rcq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = _round(idx.search(qs, K, nprobe=idx.nlist)).withColumn(
         "variant", F.lit("flat")
     )
-    # r13: the search_preassigned fallback with the SAME RCQ beam
-    # running executor-side — exact at full probe, same SQL twin
-    np_ = idx.nlist
-    bb = _round(
-        search_preassigned(
-            idx, qs, K, nprobe=np_,
-            assign_payload=idx.cq,
-            assign_fn=lambda cq, Q: cq.search_np(Q, np_)[0],
-        )
-    ).withColumn("variant", F.lit("flat_bigbatch"))
+    # the search_preassigned fallback with the SAME RCQ beam running
+    # executor-side — exact at full probe, same SQL twin
+    bb = _round(search_preassigned(idx, qs, K, nprobe=idx.nlist)).withColumn(
+        "variant", F.lit("flat_bigbatch")
+    )
     plan = index_factory("IVF64(RCQ2x3),SQ8").fit(vecs, seed=42)
     sq8 = _round(plan.search(qs, K, nprobe=64)).withColumn(
         "variant", F.lit("sq8")
@@ -974,19 +959,15 @@ def q_ivf_nested_coarse(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "variant", F.lit(desc)
             )
         )
-    # r13: the search_preassigned fallback with the PQ-routed sub-index
+    # the search_preassigned fallback with the PQ-routed sub-index
     # assignment running executor-side — exact at full probe, same SQL
     nst = IVFNestedIndex.train(
         vecs, nlist=8, sub=("pq", 8, 4), seed=42
     ).add(vecs)
     out.append(
-        _round(
-            search_preassigned(
-                nst, qs, K, nprobe=8,
-                assign_payload=nst.router,
-                assign_fn=lambda r, Q: r.assign_np(Q, 8),
-            )
-        ).withColumn("variant", F.lit("IVF8(PQ8x4),Flat#bigbatch"))
+        _round(search_preassigned(nst, qs, K, nprobe=8)).withColumn(
+            "variant", F.lit("IVF8(PQ8x4),Flat#bigbatch")
+        )
     )
     res = out[0]
     for df in out[1:]:

@@ -1,5 +1,5 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+(default /root/testdata/sf0.1) on local[session.default_cpus()] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from faiss_spark.session import get_spark
+from faiss_spark.session import default_cpus, get_spark
 
 BENCH_QUERIES = [
     "knn_tabular",
@@ -319,8 +319,8 @@ def _epoch_fields(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark("faiss_spark_bench")
+    cpus = default_cpus()
+    spark = get_spark("faiss_spark_bench", cpus=cpus)
     qs = entrymod.queries()
     # warm the JVM/Arrow path and the big-table scan once so timings
     # measure the operators, not session init / first-touch page cache

@@ -1169,6 +1169,15 @@ class ResidualCoarseQuantizerModel:
         kk = min(k, codes.shape[1])
         return self._codes_to_lists(codes[:, :kk, :]), errs[:, :kk]
 
+    @property
+    def d(self) -> int:
+        return self.codebooks.shape[2]
+
+    def probe(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
+        """The nprobe best cells per query (the IVF coarse-quantizer
+        protocol of ivf._Prober)."""
+        return self.search_np(Q, nprobe)[0]
+
     def assign_np(self, X: np.ndarray) -> np.ndarray:
         """Coarse assignment = argmin over the beam (reference
         quantize_LUT-free path: best beam member IS the assignment)."""

@@ -1,4 +1,4 @@
-"""IVF (inverted-file) index: the partitioned-table pattern.
+"""IVF (inverted-file) indexes: the partitioned-table pattern.
 
 Reference: faiss/IndexIVF.h:33-122 (Level1Quantizer + IndexIVF),
 faiss/IndexIVF.cpp:302-544 (search lifecycle, SURVEY §3.2),
@@ -9,29 +9,53 @@ The faiss mapping onto Spark:
 
   train   Level1Quantizer::train_q1 = our KMeans on a seeded sample
           → centroids artifact (small, broadcastable).
-  add     encode_vectors → (list_no, id, vec) → **Parquet partitioned by
-          list_no** (reference ArrayInvertedLists/OnDiskInvertedLists ARE
-          this layout, faiss/invlists/InvertedLists.h:30-111).
-  search  stage A: coarse top-nprobe per query against broadcast
-          centroids (= quantizer->search, IndexIVF.cpp:330).
-          stage B: scan ONLY the probed partitions — the `list_no IN
-          (cells)` filter becomes Catalyst **partition pruning**, which is
-          exactly faiss's nprobe cell selection (IndexIVF.cpp:315-338)
-          done by the planner instead of a hand-written loop.
-          stage C: per-partition distance scan against just the queries
-          probing that list (the ivf_tools big-batch shape), then the
-          same small global top-k merge as operators/knn.py.
+  add     encode_vectors → (list_no, id, payload) → **Parquet partitioned
+          by list_no** (reference ArrayInvertedLists/OnDiskInvertedLists
+          ARE this layout, faiss/invlists/InvertedLists.h:30-111).
+  search  stage A: the index's probe function ``Q, nprobe -> probes``
+          (quantizer->search, IndexIVF.cpp:330; `_Prober` applies the
+          max_codes scan budget for every family).
+          stage B: scan ONLY the probed lists with the codec's scorer.
+          stage C: a small global per-query top-k merge.
 
-At 100 TB: the codes table is partition-pruned to nprobe/nlist of its
-files; the probe set (qid → list_no) stays a broadcast; the only shuffle
-is the final candidate merge. nprobe=nlist degenerates to exact search.
+One scan loop, one scorer per codec — faiss's ``search_preassigned`` loop
+plus an ``InvertedListScanner`` per codec. Each codec has exactly one
+``CellScorer``: FlatScorer (raw floats: IVFIndex, RCQ, nested, IMI,
+MIQ2), SQScorer, PQScorer (IVFPQ and IMIPQ, with polysemous_ht), AQScorer
+(k-means or RCQ coarse, '_N*' norm estimator) and PQRScorer. A scorer is
+broadcast codec state; a task drives it as::
+
+    s = scorer.start(Q, k)              # the task's query matrix
+    cell = s.bind(list_no, qsel)        # one list × the queries Q[qsel]
+    cell.push(cols, ids)                # a codes block of any size
+    qidx, ids, dist = cell.emit()       # that cell's top-k
+
+Two plan shapes drive the scorers; ``collect_queries_bounded`` picks one
+by query-side size:
+
+  driver plan   (`_driver_search` → `_scan_probed_lists`) the queries fit
+                the MAX_DRIVER_QUERY_CELLS collect: probes are computed
+                on the driver and broadcast, the ``list_no IN (probed)``
+                filter becomes Catalyst partition pruning (faiss's nprobe
+                cell selection done by the planner), one mapInArrow scans
+                the surviving lists, and the only shuffle is the merge.
+  cogroup plan  (`_preassigned_cogrouped`, behind the public
+                ``*search_preassigned`` entry points) probe assignment
+                runs executor-side and probes ⟂⟂ codes cogroup on
+                list_no, one scorer cell per group. It is the only shape
+                that runs past the driver bound; every driver ``search()``
+                falls back to it.
+
+Range search is float-only and keeps its own loop in each shape: it
+emits every pair within the radius, with no top-k.
 """
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Iterator
 
 import numpy as np
@@ -43,7 +67,9 @@ from faiss_spark.kernels import (
     SIMILARITY_METRICS,
     TopKAccumulator,
     arrow_i64,
+    arrow_list_groups,
     arrow_list_matrix,
+    arrow_payload_matrix,
     as_matrix,
     pairwise_distances,
 )
@@ -138,30 +164,15 @@ def collect_queries_bounded(
     callable returning a DataFrame) switches overflow from raise to
     auto-fallback — the caller's distributed twin — and is returned
     verbatim; callers that pass it must type-check the result."""
-    from faiss_spark.kernels import as_matrix as _as_matrix
-
-    if d is None:
-        first = (
-            queries.select(F.size(F.col(qvec_col)).alias("d")).limit(1).first()
-        )
-        d = int(first["d"]) if first else 1
-    max_rows = max(1, MAX_DRIVER_QUERY_CELLS // max(1, d))
-    qpdf = queries.select(qid_col, qvec_col).limit(max_rows + 1).toPandas()
-    if len(qpdf) > max_rows:
-        if fallback is not None:
-            return fallback()
-        raise ValueError(
-            f"{op}: query side exceeds the driver-planned bound "
-            f"({max_rows} rows at d={d}). Chunk the queries "
-            "(operators.knn.knn_chunked) or use a distributed plan "
-            "(IVFIndex.search auto-falls-back to search_preassigned)."
-        )
-    if to_matrix is not None:
-        Q = to_matrix(qpdf[qvec_col])
-    elif dtype is not None:
-        Q = _as_matrix(qpdf[qvec_col], dtype=dtype)
-    else:
-        Q = _as_matrix(qpdf[qvec_col])
+    qpdf = collect_query_frame_bounded(
+        queries, qid_col, qvec_col, op, d=d, fallback=fallback
+    )
+    if isinstance(qpdf, DataFrame):
+        return qpdf
+    col = qpdf[qvec_col]
+    Q = to_matrix(col) if to_matrix is not None else as_matrix(
+        col, dtype=dtype or np.float64
+    )
     return qpdf[qid_col].to_numpy(np.int64), Q
 
 
@@ -169,10 +180,9 @@ def collect_query_frame_bounded(
     queries, qid_col: str, qvec_col: str, op: str, d: int | None = None,
     fallback=None,
 ):
-    """pandas-frame variant of collect_queries_bounded — same one-job
-    budget, actionable error, and optional distributed-twin ``fallback``
-    — for callers that consume the raw column objects row-wise (the
-    binary-hash probe builders)."""
+    """The bounded collect behind collect_queries_bounded, returning the
+    pandas frame — for callers that consume the raw column objects
+    row-wise (the binary-hash probe builders)."""
     if d is None:
         first = (
             queries.select(F.size(F.col(qvec_col)).alias("d")).limit(1).first()
@@ -192,8 +202,44 @@ def collect_query_frame_bounded(
     return qpdf
 
 
+class _FlatLists:
+    """Search for the raw-float families (IVFIndex, RCQ, nested, IMI,
+    MIQ2), which differ only in their coarse quantizer (``_coarse``)."""
+
+    def search(
+        self,
+        queries: DataFrame,
+        k: int,
+        nprobe: int = 1,
+        qid_col: str = "qid",
+        qvec_col: str = "vec",
+    ) -> DataFrame:
+        """IVF k-NN (reference IndexIVF::search, faiss/IndexIVF.cpp:302).
+
+        Returns (qid, id, dist, rank). nprobe is clamped to nlist
+        (IndexIVF.cpp:315). With nprobe == nlist results are exact.
+
+        The probe plan is computed on the DRIVER (the coarse state and
+        the queries are both small in the intended regime); if the query
+        side exceeds MAX_DRIVER_QUERY_CELLS / d rows, this automatically
+        falls back to the fully-distributed ``search_preassigned``
+        cogroup plan with the same probe function running
+        executor-side — the driver never materializes an unbounded
+        query frame."""
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
+            fallback=lambda: search_preassigned(
+                self, queries, k, nprobe=nprobe,
+                qid_col=qid_col, qvec_col=qvec_col,
+            ),
+        )
+
+    def _scorer(self, lists=None) -> "CellScorer":
+        return FlatScorer(self.metric)
+
+
 @dataclass
-class IVFIndex:
+class IVFIndex(_FlatLists):
     """A fitted IVF index = centroid artifact + partitioned codes table."""
 
     centroids: np.ndarray  # (nlist, d)
@@ -299,7 +345,14 @@ class IVFIndex:
         big-batch searches become scan-only on the corpus side — at
         100 TB that is the difference between one corpus shuffle per
         search and zero (the probe side, which is the small side, still
-        exchanges once)."""
+        exchanges once).
+
+        Contract: ``nbuckets`` ≥ the cores expected at search time. The
+        bucketed scan runs ONE task per bucket and the session disables
+        autoBucketedScan, so Spark never re-splits a bucket: fewer
+        buckets than cores leaves cores idle for every search. The
+        default, ``spark.sql.shuffle.partitions``, is what get_spark
+        sizes to the session's cores."""
         return _write_bucketed_codes(
             self, path, ("list_no", "id", "vec"), "ivf_codes_", nbuckets
         )
@@ -336,49 +389,8 @@ class IVFIndex:
             codes=codes,
         )
 
-    # ----------------------------------------------------------------- search
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """IVF k-NN (reference IndexIVF::search, faiss/IndexIVF.cpp:302).
-
-        Returns (qid, id, dist, rank). nprobe is clamped to nlist
-        (IndexIVF.cpp:315). With nprobe == nlist results are exact.
-
-        The probe plan is computed on the DRIVER (centroids × queries are
-        both small in the intended regime); if the query side exceeds
-        MAX_DRIVER_QUERY_CELLS / d rows, this automatically falls back to
-        the fully-distributed ``search_preassigned`` join plan — the
-        driver never materializes an unbounded query frame."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        d = self.centroids.shape[1]
-        max_rows = max(1, MAX_DRIVER_QUERY_CELLS // max(1, d))
-        # stage A — coarse quantization on the driver (centroids and queries
-        # are both small in the intended regime). ONE limited collect; the
-        # length of what came back decides driver-plan vs distributed
-        # fallback, so the checked rows are exactly the planned rows even
-        # for a nondeterministic query frame.
-        qpdf = queries.select(qid_col, qvec_col).limit(max_rows + 1).toPandas()
-        if len(qpdf) > max_rows:
-            return search_preassigned(
-                self, queries, k, nprobe=nprobe,
-                qid_col=qid_col, qvec_col=qvec_col,
-            )
-        nlist = len(self.centroids)
-        nprobe = min(nprobe, nlist)
-        largest = self.metric in SIMILARITY_METRICS
-        qids = qpdf[qid_col].to_numpy(np.int64)
-        Q = as_matrix(qpdf[qvec_col])
-        CD = pairwise_distances(Q, self.centroids, self.metric)
-        order = np.argsort(-CD if largest else CD, axis=1, kind="stable")
-        probes = order[:, :nprobe]  # (nq, nprobe)
-        return _scan_probed_lists(self.codes, qids, Q, probes, k, self.metric)
+    def _coarse(self) -> "FlatCoarse":
+        return FlatCoarse(self.centroids, self.metric)
 
 
 class IVFSearchStats:
@@ -410,6 +422,492 @@ class IVFSearchStats:
         return {"nq": self.nq, "list_scans": self.list_scans, "ndis": self.ndis}
 
 
+# ------------------------------------------------------------- stage A
+@dataclass
+class FlatCoarse:
+    """A centroid table as coarse quantizer (reference quantizer->search,
+    IndexIVF.cpp:330): exact distances to every centroid, best first;
+    the stable sort breaks ties by cell id."""
+
+    centroids: np.ndarray  # (nlist, d)
+    metric: str = "l2"
+
+    @property
+    def nlist(self) -> int:
+        return len(self.centroids)
+
+    @property
+    def d(self) -> int:
+        return self.centroids.shape[1]
+
+    def probe(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
+        D = pairwise_distances(Q, self.centroids, self.metric)
+        largest = self.metric in SIMILARITY_METRICS
+        return np.argsort(-D if largest else D, axis=1, kind="stable")[
+            :, :nprobe
+        ]
+
+
+@dataclass
+class _Prober:
+    """An index's probe function ``Q -> probes``, broadcast-safe. Any
+    coarse quantizer with ``nlist``, ``d`` and ``probe(Q, nprobe)``
+    plugs in (FlatCoarse, the RCQ beam, nested routers, IMI grids).
+
+    ``max_codes`` is the reference's per-query scan budget
+    (SearchParametersIVF, faiss/IndexIVF.h:69; the loop's ``if
+    (max_codes && ndis >= max_codes) break`` at IndexIVF.cpp:415):
+    probes are consumed nearest-first and cut once the cumulative list
+    sizes reach the budget, whole lists at a time, the crossing list
+    included. The per-list counts are plan metadata (`_list_sizes`), so
+    the cut happens before the scan and the pruned plan never reads the
+    skipped lists. Budgeted probe sets are ragged (one array per query)."""
+
+    coarse: object
+    nprobe: int
+    sizes: np.ndarray | None = None  # per-list rows, under a budget
+    max_codes: int | None = None
+
+    def __call__(self, Q: np.ndarray):
+        order = self.coarse.probe(Q, self.nprobe)
+        if self.max_codes is None:
+            return order
+        cum = np.cumsum(self.sizes[order], axis=1)
+        # keep list j iff the budget was not yet exhausted BEFORE it
+        keep = np.concatenate(
+            [np.ones((len(order), 1), bool), cum[:, :-1] < self.max_codes],
+            axis=1,
+        )
+        return [order[qi][keep[qi]] for qi in range(len(order))]
+
+
+def _prober(index, nprobe: int, max_codes: int | None = None) -> _Prober:
+    coarse = index._coarse()
+    sizes = _list_sizes(index) if max_codes is not None else None
+    return _Prober(coarse, min(nprobe, coarse.nlist), sizes, max_codes)
+
+
+def _list_sizes(index) -> np.ndarray:
+    """(nlist,) row counts of the codes table, cached on the index —
+    plan metadata for the max_codes scan budget (one metadata-cheap
+    aggregate over the partitioning column)."""
+    cached = getattr(index, "_list_sizes_cache", None)
+    if cached is not None and cached[0] is index.codes:
+        return cached[1]
+    sizes = np.zeros(index._coarse().nlist, np.int64)
+    for r in index.codes.groupBy("list_no").count().collect():
+        sizes[int(r["list_no"])] = int(r["count"])
+    index._list_sizes_cache = (index.codes, sizes)
+    return sizes
+
+
+def _invert_probes(probes) -> dict[int, np.ndarray]:
+    """list_no -> the query rows probing it, ascending (the ivf_tools
+    big-batch regrouping, contrib/ivf_tools.py:26). ``probes`` is an
+    (nq, p) array or ragged per-query arrays."""
+    if isinstance(probes, np.ndarray):
+        lens = np.full(len(probes), probes.shape[1])
+        flat = probes.ravel()
+    else:
+        lens = np.fromiter((len(p) for p in probes), np.int64, len(probes))
+        flat = np.concatenate(probes) if len(probes) else np.empty(0, np.int64)
+    rows = np.repeat(np.arange(len(lens)), lens)
+    order = np.argsort(flat, kind="stable")
+    cells, starts = np.unique(flat[order], return_index=True)
+    ends = np.r_[starts[1:], len(order)]
+    return {
+        int(c): rows[order[s:e]] for c, s, e in zip(cells, starts, ends)
+    }
+
+
+# ------------------------------------------------------ stage B scorers
+#: scratch budget (elements) of one scored block; pushes chunk to it so a
+#: hot cell never materializes its full expansion
+_SCRATCH = 1 << 22
+
+#: popcount of every byte value (polysemous Hamming pre-filter)
+_POP8 = (
+    np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
+    .sum(1)
+    .astype(np.int64)
+)
+
+
+class _Cell:
+    """One inverted list bound to the queries probing it."""
+
+    __slots__ = ("acc", "push", "prunes")
+
+    def __init__(self, acc: TopKAccumulator, push, prunes: bool):
+        self.acc, self.push, self.prunes = acc, push, prunes
+
+    def emit(self):
+        qidx, ids, dist = self.acc.emit()
+        if not self.prunes:
+            return qidx, ids, dist
+        keep = np.isfinite(dist)  # +inf marks candidates the codec dropped
+        return qidx[keep], ids[keep], dist[keep]
+
+
+class CellScorer:
+    """Per-codec inverted-list scanner: the reference's
+    InvertedListScanner (faiss/IndexIVF.h, set_query → set_list →
+    scan_codes; SURVEY §3.2). An instance is codec state, broadcast
+    once per search; both plan shapes drive it through ``start`` (per
+    task), ``bind`` (per list) and the cell's ``push``/``emit`` — see the
+    module docstring. ``push`` bounds its own scratch, so the cogroup
+    hands it a whole cell and the driver loop one Arrow batch at a time;
+    ``emit``'s query indexes point into ``qsel``. Subclasses set
+    ``cols`` (the codes-table payload they read) and implement
+    ``set_list(acc, list_no, qsel)`` returning the push function."""
+
+    cols = ("vec",)
+    metric = "l2"
+    prunes = False  # scores +inf for candidates it drops
+
+    @property
+    def largest(self) -> bool:
+        return self.metric in SIMILARITY_METRICS
+
+    def start(self, Q: np.ndarray, k: int) -> "CellScorer":
+        s = copy.copy(self)  # per-task state never lands on the broadcast
+        s.Q, s.k = Q, k
+        return s
+
+    def bind(self, list_no: int, qsel: np.ndarray) -> _Cell:
+        acc = TopKAccumulator(len(qsel), self.k, self.largest)
+        return _Cell(acc, self.set_list(acc, list_no, qsel), self.prunes)
+
+
+@dataclass
+class FlatScorer(CellScorer):
+    """Raw float lists (IVFIndex, RCQ, nested, IMI, MIQ2): the fused
+    GEMM + tie-safe top-k of TopKAccumulator.push_block."""
+
+    metric: str = "l2"
+
+    def set_list(self, acc, list_no, qsel):
+        acc.bind_queries(np.ascontiguousarray(self.Q[qsel]), self.metric)
+        return lambda cols, ids: acc.push_block(cols[0], ids)
+
+
+@dataclass
+class SQScorer(CellScorer):
+    """Scalar-quantized lists (reference SQ InvertedListScanner): decode
+    each block to floats, then the fused GEMM — asymmetric, queries stay
+    exact."""
+
+    sq: object = None  # ScalarQuantizerModel
+    metric: str = "l2"
+    cols = ("code",)
+
+    def set_list(self, acc, list_no, qsel):
+        acc.bind_queries(np.ascontiguousarray(self.Q[qsel]), self.metric)
+        chunk = max(1, _SCRATCH // self.Q.shape[1])
+
+        def push(cols, ids):
+            # decode inflates the stored bytes 4-8x: bounded chunks
+            for s in range(0, len(ids), chunk):
+                X = self.sq.decode_np(cols[0][s : s + chunk])
+                acc.push_block(X, ids[s : s + chunk])
+
+        return push
+
+
+@dataclass
+class PQScorer(CellScorer):
+    """PQ codes of residuals (IVFPQ; IMIPQ, whose cell centroid is the
+    concat of its two half-centroids). ADC through the precomputed-table
+    decomposition (IVFPQIndex._precomputed_tables):
+
+        D[q, x] = ‖q − c_l‖² + Σ_m pct[l, m, x_m] − 2⟨q_m, d_m,x_m⟩
+
+    ``pct`` carries the probed lists' query-independent rows when the
+    driver planned them; otherwise each cell computes its own row (IMI
+    never materializes 2^(2b) of them). The −2⟨q_m, d_mk⟩ terms are
+    computed once per query per task. ``ht`` is the polysemous in-list
+    Hamming pre-filter against the query's per-list residual code
+    (reference IndexIVFPQ.h:44; strict hd < ht as IndexIVFPQ.cpp)."""
+
+    coarse: np.ndarray = None  # (nlist, d), or IMI halves (2, ksub, d/2)
+    books: np.ndarray = None  # (M, ksub, dsub)
+    pct: dict | None = None
+    ht: int | None = None
+    cols = ("code",)
+    prunes = True
+
+    def start(self, Q, k):
+        s = super().start(Q, k)
+        M, ksub, _ = self.books.shape
+        # filled lazily for the queries this task touches (np.empty
+        # pages are only materialized for rows written)
+        s.t3 = np.empty((len(Q), M, ksub), np.float64)
+        s.have_t3 = np.zeros(len(Q), bool)
+        if self.ht is not None:
+            s.pqm = ProductQuantizerModel(codebooks=self.books)
+        return s
+
+    def _centroid(self, list_no: int) -> np.ndarray:
+        if self.coarse.ndim == 3:
+            ks = self.coarse.shape[1]
+            return np.concatenate(
+                [self.coarse[0][list_no // ks], self.coarse[1][list_no % ks]]
+            )
+        return self.coarse[list_no]
+
+    def set_list(self, acc, list_no, qsel):
+        books = self.books
+        M, _, dsub = books.shape
+        need = qsel[~self.have_t3[qsel]]
+        if len(need):
+            Qs = self.Q[need].reshape(len(need), M, dsub)
+            self.t3[need] = -2.0 * np.einsum("qmd,mkd->qmk", Qs, books)
+            self.have_t3[need] = True
+        c = self._centroid(list_no)
+        if self.pct is not None:
+            pct = self.pct[list_no]
+        else:
+            pct = (books * books).sum(2) + 2.0 * np.einsum(
+                "md,mkd->mk", c.reshape(M, dsub), books
+            )
+        R = self.Q[qsel] - c[None, :]
+        coarse = (R * R).sum(1)
+        luts = pct[None, :, :] + self.t3[qsel]
+        qc = self.pqm.encode_np(R) if self.ht is not None else None
+        nq = len(qsel)
+        chunk = max(16, _SCRATCH // max(1, nq))
+
+        def push(cols, ids):
+            codes = _pq_code_view(cols[0], M)
+            for s in range(0, len(ids), chunk):
+                cc = codes[s : s + chunk]
+                # per-m accumulation: no (nq, n, M) gather temp
+                D = np.broadcast_to(coarse[:, None], (nq, len(cc))).copy()
+                for m in range(M):
+                    D += luts[:, m, cc[:, m].astype(np.int64)]
+                if qc is not None:
+                    ham = np.zeros(D.shape, np.int64)
+                    for m in range(M):
+                        ham += _POP8[
+                            np.bitwise_xor(qc[:, m][:, None], cc[None, :, m])
+                        ]
+                    D[ham >= self.ht] = np.inf
+                acc.push(D, ids[s : s + chunk])
+
+        return push
+
+
+@dataclass
+class AQScorer(CellScorer):
+    """Additive-quantizer codes of residuals (reference
+    IndexIVFAdditiveQuantizer): decode = list centroid (the virtual
+    centroid's reconstruction under an additive coarse) + Σ_m
+    books[m][x_m], then the fused GEMM. With a '_N*' search_type
+    (``est``) the rank is the stored-norm estimator ‖q‖² − 2⟨q, x̂⟩ +
+    N(‖x̂‖²) instead (reference AdditiveQuantizer search_type; N ≡ 0 for
+    "none")."""
+
+    centroids: np.ndarray | None = None
+    coarse_q: object | None = None
+    books: np.ndarray = None  # (M, ksub, d)
+    norm_q: object | None = None
+    est: bool = False
+    metric: str = "l2"
+    cols = ("code",)
+
+    def set_list(self, acc, list_no, qsel):
+        cq, books = self.coarse_q, self.books
+        base = (
+            cq.reconstruct_np(np.asarray([list_no]))[0]
+            if cq is not None
+            else self.centroids[list_no]
+        )
+        Qc = np.ascontiguousarray(self.Q[qsel])
+        if self.est:
+            qn = (Qc * Qc).sum(1)[:, None]
+        else:
+            acc.bind_queries(Qc, self.metric)
+        chunk = max(1, _SCRATCH // len(base))
+
+        def push(cols, ids):
+            codes = _pq_code_view(cols[0], books.shape[0])
+            # the gather-sum inflates M bytes to d·8: bounded chunks
+            for s in range(0, len(ids), chunk):
+                cc = codes[s : s + chunk]
+                X = np.broadcast_to(base, (len(cc), len(base))).astype(
+                    np.float64
+                )
+                for m in range(books.shape[0]):
+                    X = X + books[m][cc[:, m]]
+                if not self.est:
+                    acc.push_block(X, ids[s : s + chunk])
+                    continue
+                n_est = (
+                    self.norm_q.quantize_np((X * X).sum(1))
+                    if self.norm_q is not None
+                    else np.zeros(len(X))
+                )
+                acc.push(qn - 2.0 * (Qc @ X.T) + n_est[None, :], ids[s : s + chunk])
+
+        return push
+
+
+@dataclass
+class PQRScorer(CellScorer):
+    """IVFPQR codes-only rerank (reference IndexIVFPQR.cpp:130-184): the
+    ADC estimate over the pq1 codes, a per-chunk shortlist of k·k_factor
+    per query, the pq1 + refine decode for the shortlist union only, and
+    the exact ‖(q − c) − (ŷ₁ + ŷ₂)‖² rerank. A per-chunk shortlist is a
+    superset of the reference's global one, so quality is ≥ the
+    reference's; non-shortlisted candidates score +inf."""
+
+    centroids: np.ndarray = None
+    books: np.ndarray = None
+    refine_books: np.ndarray = None
+    k_factor: int = 4
+    cols = ("code", "rcode")
+    prunes = True
+
+    def set_list(self, acc, list_no, qsel):
+        books, books2 = self.books, self.refine_books
+        M, _, dsub = books.shape
+        pq1 = ProductQuantizerModel(codebooks=books)
+        pq2 = ProductQuantizerModel(codebooks=books2)
+        R = self.Q[qsel] - self.centroids[list_no][None, :]
+        Rs = R.reshape(len(R), M, dsub)
+        luts = (
+            (Rs * Rs).sum(2)[:, :, None]
+            + (books * books).sum(2)[None, :, :]
+            - 2.0 * np.einsum("qmd,mkd->qmk", Rs, books)
+        )
+        nq = len(R)
+        chunk = max(16, _SCRATCH // max(1, nq))
+        nshort = self.k * self.k_factor
+
+        def push(cols, ids):
+            codes1 = _pq_code_view(cols[0], M)
+            codes2 = _pq_code_view(cols[1], books2.shape[0])
+            for s in range(0, len(ids), chunk):
+                cc1, cc2 = codes1[s : s + chunk], codes2[s : s + chunk]
+                n = len(cc1)
+                D = np.zeros((nq, n), np.float64)
+                for m in range(M):
+                    D += luts[:, m, cc1[:, m].astype(np.int64)]
+                ns = min(n, nshort)
+                if ns < n:
+                    short = np.argpartition(D, ns - 1, axis=1)[:, :ns]
+                else:
+                    short = np.broadcast_to(np.arange(n), (nq, n))
+                uni = np.unique(short.ravel())
+                Y = pq1.decode_np(cc1[uni]) + pq2.decode_np(cc2[uni])
+                pos = np.full(n, -1, np.int64)
+                pos[uni] = np.arange(len(uni))
+                DR = np.full_like(D, np.inf)
+                for qi in range(nq):
+                    sel = short[qi]
+                    diff = R[qi][None, :] - Y[pos[sel]]
+                    DR[qi, sel] = (diff * diff).sum(1)
+                acc.push(DR, ids[s : s + chunk])
+
+        return push
+
+
+# ------------------------------------------------- the driver plan shape
+def _probed_groups(batches, l2q: dict, stats):
+    """(list_no, qsel, payload, ids) for each probed-list block a
+    driver-plan task reads, counting IVFSearchStats on the way:
+    list_scans once per (task, list), ndis per (query, code) pair."""
+    seen: set[int] = set()
+    for list_no, cols, ids in arrow_list_groups(batches):
+        qsel = l2q.get(list_no)
+        if qsel is None:
+            continue
+        if stats is not None:
+            if list_no not in seen:
+                seen.add(list_no)
+                stats[0].add(len(qsel))
+            stats[1].add(int(len(qsel) * len(ids)))
+        yield list_no, qsel, cols, ids
+
+
+def _stats_accs(stats: "IVFSearchStats | None"):
+    return None if stats is None else (stats._acc_list_scans, stats._acc_ndis)
+
+
+def _scan_probed_lists(
+    codes: DataFrame,
+    qids: np.ndarray,
+    Q: np.ndarray,
+    l2q: dict,
+    k: int,
+    scorer: CellScorer,
+    stats: "IVFSearchStats | None" = None,
+) -> DataFrame:
+    """Stages B+C of the driver plan, shared by every coarse quantizer
+    and codec: ``l2q`` (list_no → query rows, `_invert_probes`) and the
+    queries broadcast; the ``list_no IN (probed)`` filter is partition
+    pruning; one mapInArrow binds each probed list to its queries
+    through ``scorer``; a window merges the per-list top-k."""
+    bc = codes.sparkSession.sparkContext.broadcast((qids, Q, l2q, scorer))
+    accs = _stats_accs(stats)
+
+    def scan(batches):
+        qids_, Q_, l2q_, scorer_ = bc.value
+        s = scorer_.start(Q_, k)
+        cells: dict[int, _Cell] = {}
+        for list_no, qsel, cols, ids in _probed_groups(batches, l2q_, accs):
+            cell = cells.get(list_no)
+            if cell is None:
+                cell = cells[list_no] = s.bind(list_no, qsel)
+            cell.push(cols, ids)
+        for list_no, cell in cells.items():
+            qidx, nid, nd = cell.emit()
+            yield from _cand_table(qids_[l2q_[list_no][qidx]], nid, nd).to_batches()
+
+    pruned = codes.filter(F.col("list_no").isin(sorted(l2q)))
+    cands = pruned.select("list_no", "id", *scorer.cols).mapInArrow(
+        scan, schema=_CAND_SCHEMA
+    )
+    # a vector lives in one list: no dedup, just re-rank the candidates
+    return _window_topk(cands, k, scorer.largest)
+
+
+def _driver_search(
+    index,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    qid_col: str,
+    qvec_col: str,
+    fallback=None,
+    max_codes: int | None = None,
+    stats: "IVFSearchStats | None" = None,
+    op: str | None = None,
+    **opts,
+) -> DataFrame:
+    """The driver-planned k-NN every IVF family shares: one bounded query
+    collect, the index's probe function on the driver, then
+    `_scan_probed_lists` with the index's scorer (``opts`` are codec
+    knobs, e.g. polysemous_ht). Past the collect bound ``fallback`` (the
+    family's cogroup entry point) runs instead; without one it raises."""
+    if index.codes is None:
+        raise ValueError("index has no codes table; call add() first")
+    prober = _prober(index, nprobe, max_codes)
+    collected = collect_queries_bounded(
+        queries, qid_col, qvec_col, op or f"{type(index).__name__}.search",
+        d=prober.coarse.d, fallback=fallback,
+    )
+    if isinstance(collected, DataFrame):
+        return collected
+    qids, Q = collected
+    if stats is not None:
+        stats.nq = len(qids)
+    l2q = _invert_probes(prober(Q))
+    return _scan_probed_lists(
+        index.codes, qids, Q, l2q, k, index._scorer(sorted(l2q), **opts), stats
+    )
+
+
 def ivf_range_search(
     index,
     queries: DataFrame,
@@ -419,25 +917,22 @@ def ivf_range_search(
     qvec_col: str = "vec",
     stats: IVFSearchStats | None = None,
 ) -> DataFrame:
-    """IVF range search (reference IndexIVF::range_search,
-    faiss/IndexIVF.cpp:715-781): probe the nprobe nearest cells per
-    query, then emit every (qid, id, dist) in the scanned lists with
-    dist < radius (similarity metrics: > radius). Fully map-side after
-    the partition-pruned scan — candidates are never ranked, so there is
-    NO shuffle at all. nprobe == nlist degenerates to exact
-    range_search. A query side past the driver bound auto-falls-back to
-    the fully-distributed ``range_search_preassigned`` cogroup plan
-    (stats are driver-plan-only: the distributed twin raises if an
+    """IVF range search over raw float lists (reference
+    IndexIVF::range_search, faiss/IndexIVF.cpp:715-781): probe the
+    nprobe best cells per query through the index's probe function,
+    then emit every (qid, id, dist) in the scanned lists with dist <
+    radius (similarity metrics: > radius). Fully map-side after the
+    partition-pruned scan — candidates are never ranked, so there is NO
+    shuffle at all. nprobe == nlist degenerates to exact range_search. A
+    query side past the driver bound auto-falls-back to the
+    fully-distributed ``range_search_preassigned`` cogroup plan (stats
+    are driver-plan-only: the distributed twin raises if an
     IVFSearchStats out-param was requested)."""
     from faiss_spark.kernels import range_pairs
 
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
-    spark = index.codes.sparkSession
     metric = index.metric
-    largest = metric in SIMILARITY_METRICS
-    nlist = len(index.centroids)
-    nprobe = min(nprobe, nlist)
 
     def _distributed():
         if stats is not None:
@@ -452,59 +947,30 @@ def ivf_range_search(
             qid_col=qid_col, qvec_col=qvec_col,
         )
 
+    prober = _prober(index, nprobe)
     collected = collect_queries_bounded(
         queries, qid_col, qvec_col, "ivf_range_search",
-        d=index.centroids.shape[1], fallback=_distributed,
+        d=prober.coarse.d, fallback=_distributed,
     )
     if isinstance(collected, DataFrame):
         return collected
     qids, Q = collected
-    CD = pairwise_distances(Q, index.centroids, metric)
-    order = np.argsort(-CD if largest else CD, axis=1, kind="stable")
-    probes = order[:, :nprobe]
-    probed_lists = sorted({int(c) for c in probes.ravel()})
-    list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-    for qi in range(len(qids)):
-        for c in probes[qi]:
-            list_to_q[int(c)].append(qi)
-    bc = spark.sparkContext.broadcast(
-        (qids, Q, {c: np.asarray(v, np.int64) for c, v in list_to_q.items()})
-    )
-    acc_scans = stats._acc_list_scans if stats is not None else None
-    acc_ndis = stats._acc_ndis if stats is not None else None
-    pruned = index.codes.filter(F.col("list_no").isin(probed_lists))
+    l2q = _invert_probes(prober(Q))
+    bc = index.codes.sparkSession.sparkContext.broadcast((qids, Q, l2q))
+    accs = _stats_accs(stats)
 
     def scan(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_vec_groups
-
-        qids_, Q_, l2q = bc.value
-        seen: set[int] = set()
-        for list_no, X, ids in arrow_vec_groups(batches):
-            qsel = l2q.get(list_no)
-            if qsel is None or len(qsel) == 0:
-                continue
-            if acc_scans is not None and list_no not in seen:
-                seen.add(list_no)
-                acc_scans.add(len(qsel))
-            if acc_ndis is not None:
-                acc_ndis.add(int(len(qsel) * len(ids)))
+        qids_, Q_, l2q_ = bc.value
+        for _, qsel, (X,), ids in _probed_groups(batches, l2q_, accs):
             rq, rc, vals = range_pairs(
                 np.ascontiguousarray(Q_[qsel]), X, metric, radius
             )
             if len(rq):
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qids_[qsel[rq]], pa.int64()),
-                        pa.array(ids[rc], pa.int64()),
-                        pa.array(vals, pa.float64()),
-                    ],
-                    names=["qid", "id", "dist"],
-                )
+                yield from _cand_table(qids_[qsel[rq]], ids[rc], vals).to_batches()
 
+    pruned = index.codes.filter(F.col("list_no").isin(sorted(l2q)))
     return pruned.select("list_no", "id", "vec").mapInArrow(
-        scan, schema="qid bigint, id bigint, dist double"
+        scan, schema=_CAND_SCHEMA
     )
 
 
@@ -518,7 +984,9 @@ def range_search_with_parameters(
 ) -> tuple[DataFrame, IVFSearchStats]:
     """Range-search twin of search_with_parameters (reference
     faiss/IVFlib.h:141 ``range_search_with_parameters`` — explicit params
-    + IndexIVFStats out). Stats populate once the result materializes."""
+    + IndexIVFStats out). Float lists only (IVFIndex and the RCQ, nested
+    and IMI coarse families), like ivf_range_search. Stats populate once
+    the result materializes."""
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
     spark = index.codes.sparkSession
@@ -542,20 +1010,12 @@ def search_with_parameters(
     """IVF search under explicit parameters, returning (results, stats)
     (reference faiss/IVFlib.h:129-141 ``search_with_parameters`` /
     ``ivf_search_precomputed`` — the variant that outputs IndexIVFStats).
+    Any IVF family: the index's own probe function and cell scorer, in
+    the driver plan shape (the query side must fit the driver bound).
 
-    max_codes (reference SearchParametersIVF / faiss/IndexIVF.h:69 and
-    the scan loop's ``if (max_codes && ndis >= max_codes) break`` at
-    IndexIVF.cpp:415): a per-query SCAN BUDGET — probe lists in
-    nearest-first order and stop once the cumulative list sizes reach
-    the budget (whole lists at a time, including the list that crosses
-    the boundary, exactly the reference's post-check). Spark-first form:
-    the reference enforces it inside the sequential scan loop; here the
-    driver already plans probes per query, and per-list COUNTS are plan
-    metadata (one cached aggregate), so the budget truncates the probe
-    sets BEFORE the scan — the pruned plan never reads the partitions a
-    sequential scan would have skipped, instead of reading and
-    discarding. This is the SIFT1B "IMI2x12,PQ16 / max_codes=10000"
-    serving knob (SURVEY §4 scan-budget row, benchs/README.md:122).
+    max_codes: the per-query scan budget of `_Prober` — the SIFT1B
+    "IMI2x12,PQ16 / max_codes=10000" serving knob (SURVEY §4 scan-budget
+    row, benchs/README.md:122).
 
     The stats object reads Spark accumulators, so its counters are
     populated only after the returned DataFrame is materialized (count /
@@ -563,138 +1023,16 @@ def search_with_parameters(
     "stats filled during the call" contract."""
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
-    spark = index.codes.sparkSession
-    nlist = len(index.centroids)
-    nprobe = min(nprobe, nlist)
-    largest = index.metric in SIMILARITY_METRICS
-    qids, Q = collect_queries_bounded(
-        queries, qid_col, qvec_col, "search_with_parameters",
-        d=index.centroids.shape[1],
-    )
-    CD = pairwise_distances(Q, index.centroids, index.metric)
-    order = np.argsort(-CD if largest else CD, axis=1, kind="stable")
-    probes = order[:, :nprobe]
-    if max_codes is not None:
-        sizes = _list_sizes(index)
-        cum = np.cumsum(sizes[probes], axis=1)
-        # keep list j iff the budget was not yet exhausted BEFORE it
-        keep = np.concatenate(
-            [np.ones((len(probes), 1), bool), cum[:, :-1] < max_codes], axis=1
-        )
-        probes = [probes[qi][keep[qi]] for qi in range(len(probes))]
-    stats = IVFSearchStats(spark, nq=len(qids))
-    res = _scan_probed_lists(
-        index.codes, qids, Q, probes, k, index.metric, stats=stats
+    stats = IVFSearchStats(index.codes.sparkSession, nq=0)
+    res = _driver_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_codes=max_codes,
+        stats=stats, op="search_with_parameters",
     )
     return res, stats
 
 
-def _list_sizes(index) -> np.ndarray:
-    """(nlist,) row counts of the codes table, cached on the index —
-    plan metadata for the max_codes scan budget (one metadata-cheap
-    aggregate over the partitioning column)."""
-    cached = getattr(index, "_list_sizes_cache", None)
-    if cached is not None and cached[0] is index.codes:
-        return cached[1]
-    nlist = getattr(index, "nlist", None) or len(index.centroids)
-    sizes = np.zeros(nlist, np.int64)
-    for r in index.codes.groupBy("list_no").count().collect():
-        sizes[int(r["list_no"])] = int(r["count"])
-    index._list_sizes_cache = (index.codes, sizes)
-    return sizes
-
-
-def _scan_probed_lists(
-    codes: DataFrame,
-    qids: np.ndarray,
-    Q: np.ndarray,
-    probes: np.ndarray,
-    k: int,
-    metric: str,
-    stats: "IVFSearchStats | None" = None,
-) -> DataFrame:
-    """Stages B+C of the IVF search lifecycle, shared by every coarse
-    quantizer (k-means IVFIndex, beam-search IVFRCQIndex): given the
-    per-query probe lists, scan only those partitions and merge top-k."""
-    spark = codes.sparkSession
-    largest = metric in SIMILARITY_METRICS
-    # invert: list_no -> local query indexes (the ivf_tools big-batch
-    # regrouping, contrib/ivf_tools.py:26). probes may be ragged (a list
-    # of per-query arrays) under the max_codes scan budget.
-    if isinstance(probes, np.ndarray):
-        flat = probes.ravel()
-    elif len(probes):
-        flat = np.concatenate([np.asarray(p) for p in probes])
-    else:
-        flat = np.empty(0, np.int64)
-    probed_lists = sorted({int(c) for c in flat})
-    list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-    for qi in range(len(qids)):
-        for c in probes[qi]:
-            list_to_q[int(c)].append(qi)
-    bc = spark.sparkContext.broadcast(
-        (qids, Q, {c: np.asarray(v, dtype=np.int64) for c, v in list_to_q.items()})
-    )
-
-    # stage B — partition-pruned scan: Catalyst turns the IN-filter on
-    # the partitioning column into reading only nprobe'd directories
-    pruned = codes.filter(F.col("list_no").isin(probed_lists))
-
-    acc_scans = stats._acc_list_scans if stats is not None else None
-    acc_ndis = stats._acc_ndis if stats is not None else None
-
-    def scan(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_vec_groups
-
-        qids_, Q_, l2q = bc.value
-        acc: dict[int, TopKAccumulator] = {}
-        touched: dict[int, np.ndarray] = {}
-        for key, X, ids in arrow_vec_groups(batches):
-            qsel = l2q.get(key)
-            if qsel is None or len(qsel) == 0:
-                continue
-            if key not in acc:
-                acc[key] = TopKAccumulator(len(qsel), k, metric in SIMILARITY_METRICS)
-                # fused workspace scan path: per-list query block
-                # bound once, distance tiles reused across batches
-                acc[key].bind_queries(np.ascontiguousarray(Q_[qsel]), metric)
-                touched[key] = qsel
-                if acc_scans is not None:
-                    acc_scans.add(len(qsel))
-            if acc_ndis is not None:
-                acc_ndis.add(int(len(qsel) * len(ids)))
-            acc[key].push_block(X, ids)
-        for key, a in acc.items():
-            qidx, nid, nd = a.emit()
-            qsel = touched[key]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids_[qsel[qidx]], pa.int64()),
-                    pa.array(nid, pa.int64()),
-                    pa.array(nd, pa.float64()),
-                ],
-                names=["qid", "id", "dist"],
-            )
-
-    candidates = pruned.select("list_no", "id", "vec").mapInArrow(
-        scan, schema="qid bigint, id bigint, dist double"
-    )
-
-    # stage C — global merge (a vector can only appear in one list, so
-    # no dedup needed; just re-rank the small candidate set)
-    sort = [F.col("dist").desc() if largest else F.col("dist").asc(), F.col("id").asc()]
-    w = Window.partitionBy("qid").orderBy(*sort)
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
-
-
 @dataclass
-class IVFRCQIndex:
+class IVFRCQIndex(_FlatLists):
     """IVF whose coarse quantizer is an additive quantizer (reference
     ResidualCoarseQuantizer / LocalSearchCoarseQuantizer,
     faiss/IndexAdditiveQuantizer.h:161,193 — the `IVF65536(RQ…)` factory
@@ -812,38 +1150,8 @@ class IVFRCQIndex:
             codes=spark.read.parquet(path),
         )
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Stage A = ResidualCoarseQuantizer::search (beam of
-        beam_factor·nprobe, keep the nprobe best cells per query);
-        stages B+C shared with IVFIndex. A query side past the driver
-        bound auto-falls-back to the distributed cogroup twin with the
-        SAME beam assignment running executor-side."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        nprobe = min(nprobe, self.nlist)
-        np_ = nprobe
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFRCQIndex.search",
-            d=self.cq.codebooks.shape[2],
-            fallback=lambda: search_preassigned(
-                self, queries, k, nprobe=np_,
-                qid_col=qid_col, qvec_col=qvec_col,
-                assign_payload=self.cq,
-                assign_fn=lambda cq, Q: cq.search_np(Q, np_)[0],
-            ),
-        )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        probes, _ = self.cq.search_np(Q, nprobe)
-        return _scan_probed_lists(self.codes, qids, Q, probes, k, self.metric)
+    def _coarse(self):
+        return self.cq
 
 
 @dataclass
@@ -1002,6 +1310,8 @@ class NestedCoarseRouter:
             d = ((Q[qi][None, :] - self.centroids[cc]) ** 2).sum(1)
             out[qi] = cc[np.argsort(d, kind="stable")[:nprobe]]
         return out
+
+    probe = assign_np  # the coarse-quantizer protocol of _Prober
 
     _ARRAY_FIELDS = (
         "centroids", "pq_books", "cent_codes", "inner_centroids",
@@ -1266,6 +1576,8 @@ class CompositeCoarseRouter:
                 out[qi] = cand[order[:nprobe]]
         return out
 
+    probe = assign_np  # the coarse-quantizer protocol of _Prober
+
     _ARRAY_FIELDS = (
         "inner_centroids", "cent_cell", "centroids", "sq_codes",
         "pq_books", "pq_codes", "lsh_proj", "lsh_thr", "cent_bits",
@@ -1320,7 +1632,7 @@ class CompositeCoarseRouter:
 
 
 @dataclass
-class IVFNestedIndex:
+class IVFNestedIndex(_FlatLists):
     """IVF whose coarse quantizer is an arbitrary parenthesized
     sub-index (reference index_factory.cpp:241-289 — the generic
     `IVF<n>(<any sub-index>)` grammar the RCQ/LSQ special case belongs
@@ -1406,38 +1718,8 @@ class IVFNestedIndex:
         )
         return self
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: int = 1,
-        qid_col: str = "qid",
-        qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Stage A = sub-index ranking; stages B+C shared with IVFIndex.
-        A query side past the driver bound auto-falls-back to the
-        distributed cogroup twin with the SAME router assignment
-        running executor-side (the router state broadcasts whole — it
-        is the compressed form the grammar exists for)."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        nprobe = min(nprobe, self.nlist)
-        np_ = nprobe
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFNestedIndex.search",
-            d=self.router.d,
-            fallback=lambda: search_preassigned(
-                self, queries, k, nprobe=np_,
-                qid_col=qid_col, qvec_col=qvec_col,
-                assign_payload=self.router,
-                assign_fn=lambda r, Q: r.assign_np(Q, np_),
-            ),
-        )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        probes = self.router.assign_np(Q, nprobe)
-        return _scan_probed_lists(self.codes, qids, Q, probes, k, self.metric)
+    def _coarse(self):
+        return self.router
 
     def save(self, path: str) -> "IVFNestedIndex":
         """write_index: partitioned codes + the router's npy/json state
@@ -1678,7 +1960,8 @@ class IVFPQIndex:
     def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IVFPQIndex":
         """write_index into the CLUSTERED BY (list_no) layout (see
         IVFIndex.save_bucketed) — repeated ``pq_search_preassigned``
-        cogroups become scan-only on the codes side."""
+        cogroups become scan-only on the codes side. Same contract:
+        ``nbuckets`` ≥ the cores expected at search time."""
         return _write_bucketed_codes(
             self, path, ("list_no", "id", "code"), "ivfpq_codes_", nbuckets
         )
@@ -1703,7 +1986,8 @@ class IVFPQIndex:
         qvec_col: str = "vec",
         polysemous_ht: int | None = None,
     ) -> DataFrame:
-        """ADC search over the probed partitions (SURVEY §3.2 stage B).
+        """ADC search over the probed partitions with the PQScorer
+        (SURVEY §3.2 stage B).
 
         polysemous_ht: with polysemous-trained codebooks (reorder via
         codecs.PolysemousTraining().optimize_pq(idx.pq) BEFORE add), skip
@@ -1716,131 +2000,27 @@ class IVFPQIndex:
         reference's IndexIVFPQ.cpp, so ht = M·8 can drop an all-bits-flipped
         candidate);
         tighter ht trades recall for scan-cost at 100 TB."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        nlist = len(self.centroids)
-        nprobe = min(nprobe, nlist)
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFPQIndex.search",
-            d=self.centroids.shape[1],
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: pq_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
                 polysemous_ht=polysemous_ht,
             ),
+            polysemous_ht=polysemous_ht,
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        CD = pairwise_distances(Q, self.centroids, "l2")
-        probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe]
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(len(qids)):
-            for c in probes[qi]:
-                list_to_q[int(c)].append(qi)
-        bc = spark.sparkContext.broadcast(
-            (
-                qids,
-                Q,
-                self.centroids,
-                self.pq.codebooks,
-                {c: np.asarray(v, np.int64) for c, v in list_to_q.items()},
-                # probed rows only: the broadcast scales with nprobe-ish
-                # coverage, never with nlist (ADVICE r9 — a billion-scale
-                # nlist must not cost a multi-GB broadcast per search)
-                self._precomputed_tables(probed_lists),
-            )
-        )
-        k_ = k
-        ht = polysemous_ht
-        pruned = self.codes.filter(F.col("list_no").isin(probed_lists))
 
-        def scan(batches):
-            import pyarrow as pa
+    def _coarse(self) -> "FlatCoarse":
+        return FlatCoarse(self.centroids)
 
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, Q_, C, books, l2q, pct = bc.value
-            M, ksub, dsub = books.shape
-            pqm_ = ProductQuantizerModel(codebooks=books) if ht is not None else None
-            pop8 = (
-                np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
-                .sum(1)
-                .astype(np.int64)
-            )
-            # term3 = −2⟨q_m, d_mk⟩: per QUERY, list-independent — built
-            # lazily once per task for the queries this task touches
-            # (np.empty pages are only materialized for rows written)
-            t3 = np.empty((len(Q_), M, ksub), np.float64)
-            have_t3 = np.zeros(len(Q_), bool)
-            acc: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-
-            def push(list_no: int, codes: np.ndarray, ids: np.ndarray) -> None:
-                qsel = l2q.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    return
-                codes = _pq_code_view(codes, M)
-                need = qsel[~have_t3[qsel]]
-                if len(need):
-                    Qs = Q_[need].reshape(len(need), M, dsub)
-                    t3[need] = -2.0 * np.einsum("qmd,mkd->qmk", Qs, books)
-                    have_t3[need] = True
-                # coarse term ‖q − c_l‖² + precomputed + per-query:
-                # M·ksub adds per (query, list) — no per-probe GEMM
-                R = Q_[qsel] - C[list_no][None, :]
-                coarse = (R * R).sum(1)  # (nq_l,)
-                luts = pct[list_no][None, :, :] + t3[qsel]
-                # D[q, x] = coarse[q] + sum_m lut[q, m, code[x, m]] —
-                # per-m accumulation, no (nq_l, n_codes, M) gather temp
-                D = np.broadcast_to(
-                    coarse[:, None], (len(qsel), len(codes))
-                ).copy()
-                for m in range(M):
-                    D += luts[:, m, codes[:, m].astype(np.int64)]
-                if pqm_ is not None:
-                    # per-list residual query codes (the reference's
-                    # QueryTables q_code), then per-byte popcount of
-                    # q⊕x — candidates past ht drop out of the heap
-                    qc = pqm_.encode_np(R)
-                    ham = np.zeros(D.shape, np.int64)
-                    for m in range(M):
-                        ham += pop8[
-                            np.bitwise_xor(qc[:, m][:, None], codes[None, :, m])
-                        ]
-                    # strict keep hd < ht, as the reference (IndexIVFPQ.cpp /
-                    # IndexPQ.cpp `if (hd < ht)`); ht > M*8 keeps everything
-                    D[ham >= ht] = np.inf
-                if list_no not in acc:
-                    acc[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                acc[list_no].push(D, ids)
-
-            for list_no_, codes_, ids_ in arrow_code_groups(batches):
-                push(list_no_, codes_, ids_)
-            for key, a in acc.items():
-                qidx, nid, nd = a.emit()
-                fin = np.isfinite(nd)  # polysemous-pruned slots are +inf
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qids_[qsels[key][qidx[fin]]], pa.int64()),
-                        pa.array(nid[fin], pa.int64()),
-                        pa.array(nd[fin], pa.float64()),
-                    ],
-                    names=["qid", "id", "dist"],
-                )
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
+    def _scorer(self, lists=None, polysemous_ht=None) -> "CellScorer":
+        """The driver plan passes its probed ``lists``: their
+        precomputed-table rows ride the scorer's broadcast (probed rows
+        only — the broadcast scales with nprobe coverage, never with
+        nlist)."""
+        return PQScorer(
+            coarse=self.centroids, books=self.pq.codebooks, ht=polysemous_ht,
+            pct=None if lists is None else self._precomputed_tables(lists),
         )
 
 
@@ -1876,6 +2056,45 @@ def _preassigned_subshards(index: IVFIndex, max_cell_rows: int | None) -> dict:
     return subs
 
 
+def _cogroup_search(
+    index,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    qid_col: str,
+    qvec_col: str,
+    max_cell_rows: int | None,
+    max_codes: int | None = None,
+    assign_payload=None,
+    assign_fn=None,
+    **opts,
+) -> DataFrame:
+    """The cogroup k-NN every IVF family shares: `_preassigned_cogrouped`
+    with the index's scorer (``opts`` are codec knobs) bound once per
+    cell, then the global window top-k."""
+    scorer = index._scorer(**opts)
+    bc = queries.sparkSession.sparkContext.broadcast(scorer)
+
+    def scan_cell(key, ptab, ctab):
+        if ptab.num_rows == 0 or ctab.num_rows == 0:
+            return _empty_cand_table()
+        scorer_ = bc.value
+        qids, Qg = _cand_queries(ptab)
+        cell = scorer_.start(Qg, k).bind(key[0].as_py(), np.arange(len(Qg)))
+        cell.push(
+            tuple(arrow_payload_matrix(ctab.column(c)) for c in scorer_.cols),
+            arrow_i64(ctab.column("id")),
+        )
+        qidx, nid, nd = cell.emit()
+        return _cand_table(qids[qidx], nid, nd)
+
+    cands = _preassigned_cogrouped(
+        index, queries, nprobe, qid_col, qvec_col, max_cell_rows, scan_cell,
+        scorer.cols, max_codes, assign_payload, assign_fn,
+    )
+    return _window_topk(cands, k, scorer.largest)
+
+
 def search_preassigned(
     index: IVFIndex,
     queries: DataFrame,
@@ -1891,72 +2110,25 @@ def search_preassigned(
     contrib/ivf_tools.py:26-57 search_preassigned; parallel_mode 2 of
     faiss/IndexIVF.h:109-122 — parallelize over (query, probe) pairs).
 
-    Unlike IVFIndex.search (which plans probes on the driver — right when
-    queries fit in one driver pandas frame), this variant never collects
-    queries: the probe table is computed distributed and COGROUPED with
-    the codes table on list_no. Use it when the query side is itself
-    huge (e.g. knn-graph over the whole table at 100 TB):
+    Unlike the driver-planned ``search()`` (right when the queries fit
+    one driver frame), this never collects queries: probes are assigned
+    distributed and COGROUPED with the codes table on list_no; per cell
+    the index's scorer keeps ≤ k survivors per query, and a global
+    window merges the nq·nprobe·k survivors. Use it when the query side
+    is itself huge (e.g. a knn-graph over the whole table at 100 TB).
 
-      1. probe assignment: broadcast centroids, top-nprobe per query
-         (mapInArrow, no shuffle)
-      2. probes ⟂⟂ codes cogrouped on list_no (one shuffle of each side,
-         hash-partitioned by cell — the ivf_tools regrouping as a
-         cogroup instead of a driver dict); per cell, ONE numpy GEMM of
-         the cell's queries × the cell's codes and a tie-safe per-query
-         top-k — only ≤ k survivors per (query, cell) leave the task
-      3. global window top-k over the nq·nprobe·k survivors.
+    Scale shape (`_preassigned_cogrouped`): the codes side is
+    shuffle-free for a ``save_bucketed`` index, and hot cells (>
+    ``max_cell_rows`` rows, file-backed indexes) split into bounded
+    sub-shard tasks; ``max_cell_rows=None`` disables the split.
 
-    The r11 rewrite replaced a pair JOIN + per-pair JVM expression: that
-    plan materialized BOTH 64-float vectors on every (query, candidate)
-    row — nq·nprobe·(n/nlist) pairs ≈ 22 GB through the shuffle at the
-    6M-row probe — and windowed all of them. Measured
-    (tools/preassigned_probe.py, idle): 26.5 s → 2.76 s at 600k (9.6×);
-    at 6M the old plan never finished a 10-minute budget, the cogroup
-    plan takes 7.4 s (wall 2.67× for 10× rows under the √(2n) balance
-    rule, per-unit throughput +18% — SCALE.md).
-
-    r12 scale hardening:
-      - codes side of the cogroup is SHUFFLE-FREE when the index was
-        stored with ``IVFIndex.save_bucketed`` (CLUSTERED BY list_no —
-        the scan itself proves the grouping, Spark elides the Exchange;
-        plan-pinned in tests/test_plans.py). The plain partitioned
-        layout still works, paying one corpus exchange per call.
-      - hot cells (> ``max_cell_rows`` rows, file-backed indexes only —
-        see _preassigned_subshards) are hash-split into sub-shards with
-        the probes replicated per sub-shard, so a skewed list_no runs
-        as ceil(|cell|/max_cell_rows) bounded tasks instead of one
-        unbounded straggler. ``max_cell_rows=None`` disables.
-    """
-    metric = index.metric
-    largest = metric in SIMILARITY_METRICS
-    k_ = k
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import TopKAccumulator
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        # f64 with the exact pairwise_distances op order — dist values
-        # match the driver-probed search / SQL oracle at the rounding
-        # the oracle hashes. The accumulator's tiled push keeps scratch
-        # ≈ 32 MB whatever the cell/query-group size (a hot cell under a
-        # huge query side would otherwise materialize nq_cell × m_cell
-        # doubles in one array — the cogroup is one task, AQE can't
-        # split it)
-        qids, Qg = _cand_queries(ptab)
-        Xg = arrow_list_matrix(ctab.column("vec"))
-        ids = arrow_i64(ctab.column("id"))
-        acc = TopKAccumulator(len(Qg), k_, metric in SIMILARITY_METRICS)
-        acc.bind_queries(Qg, metric)
-        acc.push_block(Xg, ids)
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids[qidx], nid, nd)
-
-    cands = _preassigned_cogrouped(
-        index, queries, nprobe, qid_col, qvec_col, max_cell_rows, scan_cell,
+    ``assign_fn(assign_payload, Q) -> probes`` overrides the index's
+    probe function (the graph-routed factory plans pass their beam walk);
+    it MUST select the same cells as the caller's driver path."""
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows,
         assign_payload=assign_payload, assign_fn=assign_fn,
     )
-    return _window_topk(cands, k, largest)
 
 
 def range_search_preassigned(
@@ -1968,33 +2140,25 @@ def range_search_preassigned(
     qvec_col: str = "vec",
     max_cell_rows: int | None = 1_000_000,
 ) -> DataFrame:
-    """Fully-distributed big-batch IVF RANGE search (reference
-    IndexIVF::range_search_preassigned, faiss/IndexIVF.h:238,
-    faiss/IndexIVF.cpp:730-827 — probes precomputed, scan parallelized
-    over (query, probe) pairs).
+    """Fully-distributed big-batch IVF RANGE search over float lists
+    (reference IndexIVF::range_search_preassigned, faiss/IndexIVF.h:238,
+    faiss/IndexIVF.cpp:730-827).
 
-    The range twin of :func:`search_preassigned`: same plan skeleton
-    (map-side probe assignment with broadcast centroids, left-semi cell
-    prune, probes⟂⟂codes cogrouped on list_no with hot-cell
-    sub-sharding), but the per-cell scan emits EVERY (qid, id, dist)
-    within the radius (similarity metrics: above it) through the tiled
-    ``range_pairs`` kernel instead of keeping a top-k — and because
-    inverted lists PARTITION the ids, no pair can appear twice, so
-    there is NO global window: the plan ends map-only after the
-    cogroup. That makes this strictly cheaper than the k-NN twin at
-    equal probe volume — the natural 100 TB shape for radius joins
-    (near-duplicate harvesting, contamination sweeps) where the query
-    side is itself a huge DataFrame that must never collect.
+    The cogroup shape of :func:`search_preassigned`, but each cell emits
+    EVERY (qid, id, dist) within the radius (similarity metrics: above
+    it) through the tiled ``range_pairs`` kernel — and because inverted
+    lists PARTITION the ids, no pair can appear twice, so there is NO
+    global window: the plan ends map-only after the cogroup. That makes
+    this the natural 100 TB shape for radius joins (near-duplicate
+    harvesting, contamination sweeps) where the query side is itself a
+    huge DataFrame. nprobe == nlist degenerates to the exact distributed
+    range join, which is how the oracle pins it."""
+    from faiss_spark.kernels import range_pairs
 
-    nprobe == nlist degenerates to the exact distributed range join
-    (every cell scanned), which is how the oracle pins it.
-    """
     metric = index.metric
     radius_ = float(radius)
 
     def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import range_pairs
-
         if ptab.num_rows == 0 or ctab.num_rows == 0:
             return _empty_cand_table()
         qids, Qg = _cand_queries(ptab)
@@ -2007,16 +2171,11 @@ def range_search_preassigned(
     )
 
 
-def _empty_cand_table():
-    import pyarrow as pa
+_CAND_SCHEMA = "qid bigint, id bigint, dist double"
 
-    return pa.table(
-        {
-            "qid": pa.array([], pa.int64()),
-            "id": pa.array([], pa.int64()),
-            "dist": pa.array([], pa.float64()),
-        }
-    )
+
+def _empty_cand_table():
+    return _cand_table([], [], [])
 
 
 def _cand_table(qids, ids, dists):
@@ -2033,15 +2192,13 @@ def _cand_table(qids, ids, dists):
 
 def _cand_queries(ptab):
     """(qids int64, Q (n,d) f64) from a probe-side cogroup table."""
-    from faiss_spark.kernels import arrow_i64, arrow_list_matrix
-
     return arrow_i64(ptab.column("qid")), arrow_list_matrix(ptab.column("vec"))
 
 
 def _window_topk(cands: DataFrame, k: int, largest: bool) -> DataFrame:
-    """Global per-query top-k over cogroup candidate rows — the shared
-    merge tail of every preassigned k-NN twin (tie-break (dist, id),
-    WindowGroupLimit-pushed on the JVM side)."""
+    """Global per-query top-k over candidate rows — the merge tail of both
+    plan shapes (tie-break (dist, id), WindowGroupLimit-pushed on the
+    JVM side)."""
     sort = [
         F.col("dist").desc() if largest else F.col("dist").asc(),
         F.col("id").asc(),
@@ -2064,20 +2221,11 @@ def _probe_table(
     """Distributed probe assignment shared by every preassigned search:
     broadcast the (small) quantizer state, map each query batch through
     ``assign_fn(payload, Q) -> (nq, p) int array | list of 1-D arrays``
-    (ragged when a per-query budget like max_codes trims the probe set),
-    and emit one (qid, vec, list_no) row per probe via Arrow take — no
-    per-row Python objects (at 100 TB the query side is itself huge;
-    this map is the whole plan's fan-out). ``assign_payload`` may
-    already be a Broadcast (callers whose cell scan shares the same
-    artifacts broadcast once and reuse the handle)."""
-    from pyspark.broadcast import Broadcast
-
-    spark = queries.sparkSession
-    bc = (
-        assign_payload
-        if isinstance(assign_payload, Broadcast)
-        else spark.sparkContext.broadcast(assign_payload)
-    )
+    (ragged under a max_codes budget), and emit one (qid, vec, list_no)
+    row per probe via Arrow take — no per-row Python objects (at 100 TB
+    the query side is itself huge; this map is the whole plan's
+    fan-out)."""
+    bc = queries.sparkSession.sparkContext.broadcast(assign_payload)
 
     def assign_probes(batches):
         import pyarrow as pa
@@ -2126,45 +2274,27 @@ def _probe_table(
 
 
 def _preassigned_cogrouped(
-    index: IVFIndex,
+    index,
     queries: DataFrame,
     nprobe: int,
     qid_col: str,
     qvec_col: str,
     max_cell_rows: int | None,
     scan_cell,
+    code_cols: tuple = ("vec",),
+    max_codes: int | None = None,
     assign_payload=None,
     assign_fn=None,
-    code_cols: tuple = ("vec",),
 ) -> DataFrame:
-    """Shared plan skeleton of the preassigned big-batch searches
-    (k-NN top-k and range): distributed probe assignment, one left-semi
-    cell prune, and the hot/cold cogroup on list_no, parameterized by
-    the per-cell Arrow scan. Emits ``qid bigint, id bigint, dist
-    double`` candidate rows; the k-NN caller windows them, the range
-    caller returns them as-is.
-
-    ``assign_fn(payload, Q) -> (nq, p) ndarray | list of 1-D arrays``
-    overrides probe selection (RCQ beam, IMI product grid, nested
-    routers…); the default is the k-means argsort every flat IVF uses.
-    Callers MUST pass the exact same cell-selection their driver path
-    computes — the fallback twins route through here precisely so
-    driver and distributed arms probe identical cells."""
+    """The cogroup plan shape (k-NN and range): distributed probe
+    assignment through the index's probe function (or the caller's
+    ``assign_fn``), then `cogrouped_cell_scan` over the ``list_no, id,
+    *code_cols`` codes table. Emits ``qid, id, dist`` candidate rows."""
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
     if assign_fn is None:
-        C = index.centroids
-        metric = index.metric
-        largest = index.metric in SIMILARITY_METRICS
-        nprobe_ = min(nprobe, len(C))
-        assign_payload = C
-
-        def assign_fn(C_, Q):
-            D = pairwise_distances(Q, C_, metric)
-            return np.argsort(-D if largest else D, axis=1, kind="stable")[
-                :, :nprobe_
-            ]
-
+        assign_payload = _prober(index, nprobe, max_codes)
+        assign_fn = _Prober.__call__
     probes = _probe_table(queries, qid_col, qvec_col, assign_payload, assign_fn)
     codes = index.codes.select("list_no", "id", *code_cols)
     return cogrouped_cell_scan(index, probes, codes, max_cell_rows, scan_cell)
@@ -2181,16 +2311,19 @@ def cogrouped_cell_scan(
     cell prune + hot/cold cogroup on ``list_no``, parameterized by the
     per-cell scan. ``probes`` carries ``list_no`` plus whatever
     query payload the scan reads (float ``vec``, binary ``qcode``);
-    ``codes`` likewise. Shared by the float k-NN/range twins, the coded
-    (SQ/PQ/AQ) twins, and the binary Hamming twin
+    ``codes`` likewise. Shared by the IVF k-NN and range cogroups, the
+    fast-scan twins and the binary Hamming twin
     (binary.binary_search_preassigned).
 
-    The scan is Arrow-native (``applyInArrow``, r13 — VERDICT r12 #3):
+    The scan is Arrow-native (``applyInArrow``):
     ``scan_cell(key, probe_table, code_table) -> pa.Table`` with columns
-    (qid, id, dist). Replacing the per-cell pandas frames removed the
-    row-object framing cost that made the range twin emit-bound
-    (SCALE.md r12: 4.76× wall at 10× rows; the emitted pairs cross the
-    cogroup boundary once per cell)."""
+    (qid, id, dist) — no per-cell pandas framing (SCALE.md r12: the
+    emitted pairs cross the cogroup boundary once per cell).
+
+    Codes side: a ``save_bucketed`` index (CLUSTERED BY list_no) scans
+    with ``HashPartitioning(list_no)`` already proven, so Spark elides
+    the corpus Exchange (plan-pinned in tests/test_plans.py); the plain
+    partitioned layout pays one corpus exchange per call."""
     # materialize ONCE: the probe table feeds both the cell-pruning
     # left-semi and the cogroup — re-executing probe assignment would pay
     # the centroid distance pass twice and, on a nondeterministic query
@@ -2208,7 +2341,7 @@ def cogrouped_cell_scan(
         return (
             p.groupBy(*keys)
             .cogroup(c.groupBy(*keys))
-            .applyInArrow(scan_cell, schema="qid bigint, id bigint, dist double")
+            .applyInArrow(scan_cell, schema=_CAND_SCHEMA)
         )
 
     subs = _preassigned_subshards(index, max_cell_rows)
@@ -2432,7 +2565,8 @@ class IVFSQIndex:
     def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IVFSQIndex":
         """write_index into the CLUSTERED BY (list_no) layout (see
         IVFIndex.save_bucketed) — repeated ``sq_search_preassigned``
-        cogroups become scan-only on the codes side."""
+        cogroups become scan-only on the codes side. Same contract:
+        ``nbuckets`` ≥ the cores expected at search time."""
         return _write_bucketed_codes(
             self, path, ("list_no", "id", "code"), "ivfsq_codes_", nbuckets
         )
@@ -2483,105 +2617,26 @@ class IVFSQIndex:
         qid_col: str = "qid",
         qvec_col: str = "vec",
     ) -> DataFrame:
-        """Same plan as IVFIndex.search; the scan decodes SQ bytes to a
-        float block before the GEMM (asymmetric: queries stay exact).
-        Probe selection under an additive coarse is the RCQ beam
-        (reference ResidualCoarseQuantizer::search). A query side past
-        the driver bound auto-falls-back to the fully-distributed
-        ``sq_search_preassigned`` cogroup over the coded lists."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        nlist = self.nlist
-        nprobe = min(nprobe, nlist)
-        largest = self.metric in SIMILARITY_METRICS
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFSQIndex.search", d=self.d,
+        """Same plan as IVFIndex.search with the SQScorer (decode to a
+        float block before the GEMM; queries stay exact). Probe selection
+        under an additive coarse is the RCQ beam (reference
+        ResidualCoarseQuantizer::search). A query side past the driver
+        bound auto-falls-back to ``sq_search_preassigned``."""
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: sq_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
+
+    def _coarse(self):
         if self.coarse_q is not None:
-            probes, _ = self.coarse_q.search_np(Q, nprobe)
-        else:
-            CD = pairwise_distances(Q, self.centroids, self.metric)
-            order = np.argsort(-CD if largest else CD, axis=1, kind="stable")
-            probes = order[:, :nprobe]
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(len(qids)):
-            for c in probes[qi]:
-                list_to_q[int(c)].append(qi)
-        bc = spark.sparkContext.broadcast(
-            (
-                qids,
-                Q,
-                {c: np.asarray(v, np.int64) for c, v in list_to_q.items()},
-                self.sq.vmin,
-                self.sq.vdiff,
-                self.sq.bits,
-                self.sq.variant,
-            )
-        )
-        metric = self.metric
-        k_ = k
-        pruned = self.codes.filter(F.col("list_no").isin(probed_lists))
+            return self.coarse_q
+        return FlatCoarse(self.centroids, self.metric)
 
-        def scan(batches):
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_code_groups
-            from faiss_spark.operators.codecs import ScalarQuantizerModel
-
-            qids_, Q_, l2q, vmin, vdiff, bits, variant = bc.value
-            sqm = ScalarQuantizerModel(
-                vmin=vmin, vdiff=vdiff, bits=bits, variant=variant
-            )
-            acc: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                qsel = l2q.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                X = sqm.decode_np(codes)
-                if list_no not in acc:
-                    acc[list_no] = TopKAccumulator(
-                        len(qsel), k_, metric in SIMILARITY_METRICS
-                    )
-                    acc[list_no].bind_queries(
-                        np.ascontiguousarray(Q_[qsel]), metric
-                    )
-                    qsels[list_no] = qsel
-                acc[list_no].push_block(X, ids)
-            for key, a in acc.items():
-                qidx, nid, nd = a.emit()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qids_[qsels[key][qidx]], pa.int64()),
-                        pa.array(nid, pa.int64()),
-                        pa.array(nd, pa.float64()),
-                    ],
-                    names=["qid", "id", "dist"],
-                )
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        sort = [
-            F.col("dist").desc() if largest else F.col("dist").asc(),
-            F.col("id").asc(),
-        ]
-        w = Window.partitionBy("qid").orderBy(*sort)
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
+    def _scorer(self, lists=None) -> "CellScorer":
+        return SQScorer(sq=self.sq, metric=self.metric)
 
 
 def sq_search_preassigned(
@@ -2594,69 +2649,14 @@ def sq_search_preassigned(
     max_cell_rows: int | None = 1_000_000,
 ) -> DataFrame:
     """Fully-distributed big-batch search over SQ-CODED inverted lists —
-    search_preassigned for IndexIVFScalarQuantizer (the reference's
-    big-batch contrib path runs on any IndexIVF subclass; here the
-    codes side of the cogroup carries SQ bytes, 4–8× smaller than raw
-    f32 vectors, and each cell decodes on the fly before its GEMM —
-    the SQ InvertedListScanner inside the cogroup).
-
-    At 100 TB this is the preferred big-batch shape: the corpus-side
-    payload through the exchange (or the bucketed scan) is the CODED
-    table, so an SQ8 index moves a quarter of what the raw-vector
-    cogroup moves at identical probe volume. Probe selection matches
-    IVFSQIndex.search exactly — k-means argsort, or the RCQ/LSQ beam
-    for an additive coarse (the fitted coarse model broadcasts whole:
-    it is the same numpy state a driver-planned search holds)."""
-    from faiss_spark.operators.codecs import ScalarQuantizerModel
-
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    metric = index.metric
-    largest = metric in SIMILARITY_METRICS
-    nprobe_ = min(nprobe, index.nlist)
-    vmin, vdiff, bits = index.sq.vmin, index.sq.vdiff, index.sq.bits
-    variant = index.sq.variant
-    k_ = k
-
-    def assign_fn(payload, Q):
-        C_, cq = payload
-        if cq is not None:
-            order, _ = cq.search_np(Q, nprobe_)
-            return order
-        D = pairwise_distances(Q, C_, metric)
-        return np.argsort(-D if largest else D, axis=1, kind="stable")[
-            :, :nprobe_
-        ]
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import TopKAccumulator, arrow_binary_matrix
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        sqm = ScalarQuantizerModel(
-            vmin=vmin, vdiff=vdiff, bits=bits, variant=variant
-        )
-        qids, Qg = _cand_queries(ptab)
-        acc = TopKAccumulator(len(Qg), k_, largest)
-        acc.bind_queries(Qg, metric)
-        ids = arrow_i64(ctab.column("id"))
-        raw = arrow_binary_matrix(ctab.column("code"))
-        # decode in bounded chunks: a hot cell never holds its full
-        # float expansion (decode inflates 4-8x over the stored bytes)
-        d_out = Qg.shape[1]
-        chunk = max(1, (1 << 22) // max(1, d_out))
-        for s in range(0, len(ids), chunk):
-            X = sqm.decode_np(raw[s:s + chunk])
-            acc.push_block(X, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids[qidx], nid, nd)
-
-    cands = _preassigned_cogrouped(
-        index, queries, nprobe_, qid_col, qvec_col, max_cell_rows, scan_cell,
-        assign_payload=(index.centroids, index.coarse_q),
-        assign_fn=assign_fn, code_cols=("code",),
+    the cogroup shape of IVFSQIndex.search (same probes: k-means argsort
+    or the RCQ/LSQ beam; same SQScorer). At 100 TB this is the preferred
+    big-batch shape: the corpus side through the exchange (or the
+    bucketed scan) is the CODED table, a quarter of the raw-vector
+    cogroup's payload at SQ8."""
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows
     )
-    return _window_topk(cands, k, largest)
 
 
 def _pq_code_view(raw: np.ndarray, M: int) -> np.ndarray:
@@ -2664,9 +2664,7 @@ def _pq_code_view(raw: np.ndarray, M: int) -> np.ndarray:
     code column stores ``ProductQuantizerModel.code_dtype`` bytes —
     1 byte per sub-code for ksub ≤ 256, 2 bytes (little-endian uint16)
     above (reference ProductQuantizer.h:30 bit-packs arbitrary widths;
-    two whole bytes carry the same information here). Shared by every
-    ADC scan so a >8-bit PQ decodes identically on the driver-planned
-    and preassigned paths."""
+    two whole bytes carry the same information here)."""
     if raw.shape[1] == M:
         return raw
     if raw.shape[1] == 2 * M:
@@ -2689,131 +2687,17 @@ def pq_search_preassigned(
     max_codes: int | None = None,
 ) -> DataFrame:
     """Fully-distributed big-batch ADC search over PQ-CODED inverted
-    lists — search_preassigned for IndexIVFPQ and its IMI-coarse form
-    (reference contrib/ivf_tools.py:26-57 is index-agnostic; the
-    flagship 100 TB composite of benchs/distributed_ondisk/README.md is
-    exactly this OPQ+IVF+PQ case — VERDICT r12 #1).
-
-    Same cogroup skeleton as the float/SQ/binary twins
-    (``cogrouped_cell_scan``: distributed probe assignment, left-semi
-    cell prune, hot-cell sub-sharding, bucketed zero-corpus-shuffle
-    layout via ``save_bucketed``), with the per-cell scan building the
-    residual ADC LUT from the broadcast codebooks — the precomputed-term
-    decomposition the driver path uses (IVFPQIndex._precomputed_tables):
-    lut[q,m,j] = (‖d_mj‖² + 2⟨c_lm, d_mj⟩) − 2⟨q_m, d_mj⟩, plus the
-    per-query coarse term ‖q − c_l‖². The codes side of the cogroup
-    carries M bytes/row — cheaper through the exchange than even the SQ
-    twin's 4–8×.
-
-    Probe selection reuses the EXACT driver cell-selection: k-means L2
-    argsort for IVFPQIndex, the IMI product-distance grid for
-    IMIPQIndex (IMIIVFIndex._probe verbatim), including the
-    ``max_codes`` nearest-first scan budget (ragged probe sets) and the
-    in-scan ``polysemous_ht`` Hamming pre-filter."""
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    is_imi = hasattr(index, "sub_centroids")
-    nprobe_ = min(nprobe, index.nlist if is_imi else len(index.centroids))
-    sizes = _list_sizes(index) if max_codes is not None else None
-    k_ = k
-    ht = polysemous_ht
-    mc = max_codes
-    # one broadcast feeds BOTH probe assignment and the cell scans —
-    # coarse state + codebooks never ride in task closures
-    bc = queries.sparkSession.sparkContext.broadcast(
-        (
-            index.sub_centroids if is_imi else index.centroids,
-            index.pq.codebooks,
-            sizes,
-        )
+    lists — the cogroup shape of IVFPQIndex.search and IMIPQIndex.search
+    (reference contrib/ivf_tools.py:26-57 is index-agnostic; the flagship
+    100 TB composite of benchs/distributed_ondisk/README.md is exactly
+    this OPQ+IVF+PQ case). Same probes (k-means argsort or the IMI
+    product grid, with the ``max_codes`` budget) and the same PQScorer,
+    including the ``polysemous_ht`` pre-filter; each cell computes its
+    own precomputed-table row. The codes side carries M bytes per row."""
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows,
+        max_codes=max_codes, polysemous_ht=polysemous_ht,
     )
-
-    def assign_fn(payload, Q):
-        coarse_, _, sizes_ = payload
-        if is_imi:
-            order = IMIIVFIndex(sub_centroids=coarse_)._probe(Q, nprobe_)
-        else:
-            CD = pairwise_distances(Q, coarse_, "l2")
-            order = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-        if sizes_ is None:
-            return order
-        # nearest-first scan budget (reference IndexIVF.cpp:415
-        # max_codes): cut once cumulative probed-list sizes reach the
-        # budget, crossing list included — identical to the driver plan
-        cum = np.cumsum(sizes_[order], axis=1)
-        keep = np.concatenate(
-            [np.ones((len(order), 1), bool), cum[:, :-1] < mc], axis=1
-        )
-        return [order[qi][keep[qi]] for qi in range(len(order))]
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import TopKAccumulator, arrow_binary_matrix
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        coarse, books, _ = bc.value
-        list_no = key[0].as_py()
-        qids, Qg = _cand_queries(ptab)
-        nq = len(Qg)
-        M, ksub, dsub = books.shape
-        if is_imi:
-            ks = coarse.shape[1]
-            cent = np.concatenate(
-                [coarse[0][list_no // ks], coarse[1][list_no % ks]]
-            )
-        else:
-            cent = coarse[list_no]
-        # per-(query, cell) LUT via the precomputed-term decomposition
-        # (IVFPQIndex._precomputed_tables): one M·ksub·dsub einsum per
-        # cell for the query-independent term, one per query group for
-        # the −2⟨q_m, d_mk⟩ term — no per-code GEMM
-        pct_row = (books * books).sum(2) + 2.0 * np.einsum(
-            "md,mkd->mk", cent.reshape(M, dsub), books
-        )
-        t3 = -2.0 * np.einsum(
-            "qmd,mkd->qmk", Qg.reshape(nq, M, dsub), books
-        )
-        luts = pct_row[None, :, :] + t3
-        R = Qg - cent[None, :]
-        coarse_d = (R * R).sum(1)
-        ids = arrow_i64(ctab.column("id"))
-        codes = _pq_code_view(arrow_binary_matrix(ctab.column("code")), M)
-        if ht is not None:
-            pqm = ProductQuantizerModel(codebooks=books)
-            qc = pqm.encode_np(R)
-            pop8 = (
-                np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
-                .sum(1)
-                .astype(np.int64)
-            )
-        acc = TopKAccumulator(nq, k_, largest=False)
-        # gather-sum in bounded chunks: a hot cell never materializes
-        # its full (nq, n_codes) distance block
-        chunk = max(16, (1 << 22) // max(1, nq))
-        for s in range(0, len(ids), chunk):
-            cc = codes[s:s + chunk]
-            D = np.broadcast_to(coarse_d[:, None], (nq, len(cc))).copy()
-            for m in range(M):
-                D += luts[:, m, cc[:, m].astype(np.int64)]
-            if ht is not None:
-                ham = np.zeros(D.shape, np.int64)
-                for m in range(M):
-                    ham += pop8[
-                        np.bitwise_xor(qc[:, m][:, None], cc[None, :, m])
-                    ]
-                # strict hd < ht as the reference (IndexIVFPQ.cpp)
-                D[ham >= ht] = np.inf
-            acc.push(D, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        fin = np.isfinite(nd)  # polysemous-pruned slots are +inf
-        return _cand_table(qids[qidx[fin]], nid[fin], nd[fin])
-
-    cands = _preassigned_cogrouped(
-        index, queries, nprobe_, qid_col, qvec_col, max_cell_rows, scan_cell,
-        assign_payload=bc, assign_fn=assign_fn,
-        code_cols=("code",),
-    )
-    return _window_topk(cands, k, largest=False)
 
 
 def aq_search_preassigned(
@@ -2826,94 +2710,13 @@ def aq_search_preassigned(
     max_cell_rows: int | None = 1_000_000,
 ) -> DataFrame:
     """Fully-distributed big-batch search over ADDITIVE-QUANTIZER-coded
-    inverted lists — search_preassigned for IndexIVFAdditiveQuantizer
-    (reference contrib/ivf_tools.py pattern over
-    faiss/IndexIVFAdditiveQuantizer.h:26). Same cogroup skeleton as the
-    SQ/PQ twins; the per-cell scan gather-sums the M codebook rows plus
-    the list centroid (the AQ decode) in bounded chunks before the
-    distance pass, honoring the index's '_N*' stored-norm search_type
-    estimator exactly as the driver-planned scan does. Probe selection
-    matches IVFAQIndex.search — metric argsort, or the RCQ/LSQ beam
-    under an additive coarse."""
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    metric = index.metric
-    largest = metric in SIMILARITY_METRICS
-    nprobe_ = min(nprobe, index.nlist)
-    est = index.search_type is not None and metric == "l2"
-    k_ = k
-    bc = queries.sparkSession.sparkContext.broadcast(
-        (
-            index.centroids,
-            index.coarse_q,
-            index.rq.codebooks,
-            index.norm_q if est else None,
-        )
+    inverted lists — the cogroup shape of IVFAQIndex.search (reference
+    faiss/IndexIVFAdditiveQuantizer.h:26): same probes (metric argsort or
+    the RCQ/LSQ beam) and the same AQScorer, '_N*' norm estimator
+    included."""
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows
     )
-
-    def assign_fn(payload, Q):
-        C_, cq, _, _ = payload
-        if cq is not None:
-            order, _ = cq.search_np(Q, nprobe_)
-            return order
-        D = pairwise_distances(Q, C_, metric)
-        return np.argsort(-D if largest else D, axis=1, kind="stable")[
-            :, :nprobe_
-        ]
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import TopKAccumulator, arrow_binary_matrix
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        C_, cq, books, norm_q = bc.value
-        list_no = key[0].as_py()
-        qids, Qg = _cand_queries(ptab)
-        base = (
-            cq.reconstruct_np(np.asarray([list_no]))[0]
-            if cq is not None
-            else C_[list_no]
-        )
-        ids = arrow_i64(ctab.column("id"))
-        codes = _pq_code_view(
-            arrow_binary_matrix(ctab.column("code")), books.shape[0]
-        )
-        acc = TopKAccumulator(len(Qg), k_, largest)
-        if not est:
-            acc.bind_queries(Qg, metric)
-        # decode in bounded chunks: the gather-sum inflates the stored
-        # M bytes to d·8, a hot cell never holds its full expansion
-        chunk = max(1, (1 << 22) // max(1, Qg.shape[1]))
-        for s in range(0, len(ids), chunk):
-            cc = codes[s:s + chunk]
-            X = np.broadcast_to(base, (len(cc), len(base))).astype(
-                np.float64
-            )
-            for m in range(books.shape[0]):
-                X = X + books[m][cc[:, m]]
-            if est:
-                n_raw = (X * X).sum(1)
-                n_est = (
-                    norm_q.quantize_np(n_raw)
-                    if norm_q is not None
-                    else np.zeros(len(X))
-                )
-                D = (
-                    (Qg * Qg).sum(1)[:, None]
-                    - 2.0 * (Qg @ X.T)
-                    + n_est[None, :]
-                )
-                acc.push(D, ids[s:s + chunk])
-            else:
-                acc.push_block(X, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids[qidx], nid, nd)
-
-    cands = _preassigned_cogrouped(
-        index, queries, nprobe_, qid_col, qvec_col, max_cell_rows, scan_cell,
-        assign_payload=bc, assign_fn=assign_fn, code_cols=("code",),
-    )
-    return _window_topk(cands, k, largest)
 
 
 def pqr_search_preassigned(
@@ -2925,87 +2728,18 @@ def pqr_search_preassigned(
     qvec_col: str = "vec",
     max_cell_rows: int | None = 1_000_000,
 ) -> DataFrame:
-    """Fully-distributed big-batch IVFPQR codes-rerank search —
-    search_preassigned for the reference's two-stage IndexIVFPQR
-    (faiss/IndexIVFPQR.h:19) in its codes-only mode. The per-cell scan
-    mirrors IVFPQRIndex._search_pqr_codes chunk for chunk: ADC estimate
-    over the pq1 codes, per-chunk shortlist of k·k_factor, refine
-    decode (pq1 + refine_pq gather-sum) for the shortlist union only,
-    exact re-rank of the shortlist — the same ≥-reference-quality
-    superset shortlist discipline, now over the cogroup so the query
+    """Fully-distributed big-batch IVFPQR codes-rerank search — the
+    cogroup shape of the reference's two-stage IndexIVFPQR
+    (faiss/IndexIVFPQR.h:19) in its codes-only mode, through the same
+    PQRScorer as IVFPQRIndex.search(rerank='pqr_codes'), so the query
     side never collects."""
-    base = index.ivfpq
-    if base.codes is None:
-        raise ValueError("index has no codes table; call train() first")
     if index.refine_pq is None:
         raise ValueError(
             "pqr_search_preassigned needs a refine PQ; train with M_refine"
         )
-    nprobe_ = min(nprobe, len(base.centroids))
-    k_, kf = k, index.k_factor
-    bc = queries.sparkSession.sparkContext.broadcast(
-        (base.centroids, base.pq.codebooks, index.refine_pq.codebooks)
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows
     )
-
-    def assign_fn(payload, Q):
-        CD = pairwise_distances(Q, payload[0], "l2")
-        return np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import TopKAccumulator, arrow_binary_matrix
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        C_, books1, books2 = bc.value
-        pq1 = ProductQuantizerModel(codebooks=books1)
-        pq2 = ProductQuantizerModel(codebooks=books2)
-        M, _, dsub = books1.shape
-        list_no = key[0].as_py()
-        qids, Qg = _cand_queries(ptab)
-        nq = len(Qg)
-        codes1 = _pq_code_view(arrow_binary_matrix(ctab.column("code")), M)
-        codes2 = _pq_code_view(
-            arrow_binary_matrix(ctab.column("rcode")), books2.shape[0]
-        )
-        ids = arrow_i64(ctab.column("id"))
-        R = Qg - C_[list_no][None, :]
-        Rs = R.reshape(nq, M, dsub)
-        luts = (
-            (Rs * Rs).sum(2)[:, :, None]
-            + (books1 * books1).sum(2)[None, :, :]
-            - 2.0 * np.einsum("qmd,mkd->qmk", Rs, books1)
-        )
-        acc = TopKAccumulator(nq, k_, largest=False)
-        chunk = max(16, (1 << 22) // max(1, nq))
-        for s in range(0, len(ids), chunk):
-            cc1, cc2 = codes1[s:s + chunk], codes2[s:s + chunk]
-            D = np.zeros((nq, len(cc1)), np.float64)
-            for m in range(M):
-                D += luts[:, m, cc1[:, m].astype(np.int64)]
-            ns = min(len(cc1), k_ * kf)
-            if ns < len(cc1):
-                short = np.argpartition(D, ns - 1, axis=1)[:, :ns]
-            else:
-                short = np.broadcast_to(np.arange(len(cc1)), (nq, len(cc1)))
-            uni = np.unique(short.ravel())
-            Y = pq1.decode_np(cc1[uni]) + pq2.decode_np(cc2[uni])
-            pos = np.full(len(cc1), -1, np.int64)
-            pos[uni] = np.arange(len(uni))
-            DR = np.full_like(D, np.inf)
-            for qi in range(nq):
-                sel = short[qi]
-                diff = R[qi][None, :] - Y[pos[sel]]
-                DR[qi, sel] = (diff * diff).sum(1)
-            acc.push(DR, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        keep = np.isfinite(nd)
-        return _cand_table(qids[qidx[keep]], nid[keep], nd[keep])
-
-    cands = _preassigned_cogrouped(
-        base, queries, nprobe_, qid_col, qvec_col, max_cell_rows, scan_cell,
-        assign_payload=bc, assign_fn=assign_fn, code_cols=("code", "rcode"),
-    )
-    return _window_topk(cands, k, largest=False)
 
 
 def imi_assign(
@@ -3064,15 +2798,14 @@ def imi_assign(
 
 
 @dataclass
-class IMIIVFIndex:
+class IMIIVFIndex(_FlatLists):
     """IVFFlat with a MultiIndexQuantizer coarse — the factory "IMI2x<b>"
     form (reference faiss/index_factory.cpp:241-289 parse path,
     faiss/IndexPQ.h:139 MultiIndexQuantizer): nlist = 2^(2b) cells from
     two 2^b half-space codebooks. Coarse probing evaluates the PRODUCT
     distance d1[i] + d2[j] over cell (i, j) — the driver-side analogue of
     the reference's multi-index heap traversal — then the scan is the
-    shared partition-pruned _scan_probed_lists plan. L2 only (as the
-    reference's IMI)."""
+    shared probed-list scan. L2 only (as the reference's IMI)."""
 
     sub_centroids: np.ndarray  # (2, ksub, d/2)
     metric: str = "l2"
@@ -3086,11 +2819,14 @@ class IMIIVFIndex:
     def nlist(self) -> int:
         return self.ksub * self.ksub
 
-    # duck-typed alias so shared helpers (search_with_parameters) that
-    # read len(index.centroids) see the virtual cell count
     @property
-    def centroids(self) -> np.ndarray:
-        return np.empty((self.nlist, 0))
+    def d(self) -> int:
+        return 2 * self.sub_centroids.shape[2]
+
+    def _coarse(self) -> "IMIIVFIndex":
+        # the codes-free copy IS the coarse quantizer (broadcast-safe);
+        # MIQ2's truncated grid rides along via its own _probe()
+        return replace(self, codes=None)
 
     @staticmethod
     def train(
@@ -3145,6 +2881,11 @@ class IMIIVFIndex:
             codes=spark.read.parquet(path),
         )
 
+    def probe(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
+        """The coarse-quantizer protocol of _Prober (MIQ2 overrides
+        ``_probe``)."""
+        return self._probe(Q, nprobe)
+
     def _probe(self, Q: np.ndarray, nprobe: int) -> np.ndarray:
         """Top-nprobe cells per query by product distance (reference
         MultiIndexQuantizer::search, faiss/IndexPQ.cpp multi-index heap)."""
@@ -3169,40 +2910,6 @@ class IMIIVFIndex:
         )
         return np.take_along_axis(part, order, axis=1)
 
-    def search(
-        self, queries: DataFrame, k: int, nprobe: int = 1,
-        qid_col: str = "qid", qvec_col: str = "vec",
-    ) -> DataFrame:
-        """Product-distance probing + flat scan; a query side past the
-        driver bound auto-falls-back to the distributed cogroup twin
-        with the SAME `_probe` grid (or MIQ2 truncated grid — the
-        subclass override rides along via type(self)) executor-side."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        cls = type(self)
-        state = self._probe_state()
-        np_ = nprobe
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IMIIVFIndex.search",
-            d=2 * self.sub_centroids.shape[2],
-            fallback=lambda: search_preassigned(
-                self, queries, k, nprobe=np_,
-                qid_col=qid_col, qvec_col=qvec_col,
-                assign_payload=state,
-                assign_fn=lambda s, Q: cls(**s)._probe(Q, np_),
-            ),
-        )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        probes = self._probe(Q, nprobe)
-        return _scan_probed_lists(self.codes, qids, Q, probes, k, self.metric)
-
-    def _probe_state(self) -> dict:
-        """Constructor kwargs that reproduce this coarse quantizer's
-        `_probe` on an executor (no codes DataFrame — just the arrays)."""
-        return {"sub_centroids": self.sub_centroids}
-
 
 @dataclass
 class MIQ2IVFIndex(IMIIVFIndex):
@@ -3222,12 +2929,6 @@ class MIQ2IVFIndex(IMIIVFIndex):
     MultiIndexQuantizer2(d, nbits, assign_index_0, assign_index_1)."""
 
     assign_k2: int | None = None
-
-    def _probe_state(self) -> dict:
-        return {
-            "sub_centroids": self.sub_centroids,
-            "assign_k2": self.assign_k2,
-        }
 
     @staticmethod
     def train(
@@ -3448,7 +3149,8 @@ class IMIPQIndex:
     def save_bucketed(self, path: str, nbuckets: int | None = None) -> "IMIPQIndex":
         """write_index into the CLUSTERED BY (list_no) layout (see
         IVFIndex.save_bucketed) — repeated ``pq_search_preassigned``
-        cogroups become scan-only on the codes side."""
+        cogroups become scan-only on the codes side. Same contract:
+        ``nbuckets`` ≥ the cores expected at search time."""
         return _write_bucketed_codes(
             self, path, ("list_no", "id", "code"), "imipq_codes_", nbuckets
         )
@@ -3481,131 +3183,23 @@ class IMIPQIndex:
         nearest-first once cumulative list sizes reach the budget,
         crossing list included — planned from cached per-list counts, so
         the pruned scan never reads the skipped partitions)."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IMIPQIndex.search",
-            d=2 * self.sub_centroids.shape[2],
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: pq_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
                 polysemous_ht=polysemous_ht, max_codes=max_codes,
             ),
+            max_codes=max_codes, polysemous_ht=polysemous_ht,
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        probes = IMIIVFIndex(sub_centroids=self.sub_centroids)._probe(Q, nprobe)
-        if max_codes is not None:
-            sizes = _list_sizes(self)
-            cum = np.cumsum(sizes[probes], axis=1)
-            keep = np.concatenate(
-                [np.ones((len(probes), 1), bool), cum[:, :-1] < max_codes],
-                axis=1,
-            )
-            probes = [probes[qi][keep[qi]] for qi in range(len(probes))]
-            probed_lists = sorted(
-                {int(c) for p in probes for c in p}
-            )
-        else:
-            probed_lists = sorted({int(c) for c in probes.ravel()})
-        list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(len(qids)):
-            for c in probes[qi]:
-                list_to_q[int(c)].append(qi)
-        bc = spark.sparkContext.broadcast(
-            (
-                qids,
-                Q,
-                self.sub_centroids,
-                self.pq.codebooks,
-                {c: np.asarray(v, np.int64) for c, v in list_to_q.items()},
-            )
-        )
-        k_ = k
-        ht = polysemous_ht
-        ksub_c = self.ksub
-        pruned = self.codes.filter(F.col("list_no").isin(probed_lists))
 
-        def scan(batches):
-            import pyarrow as pa
+    def _coarse(self) -> "IMIIVFIndex":
+        return IMIIVFIndex(sub_centroids=self.sub_centroids)
 
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, Q_, sub_c, books, l2q = bc.value
-            M, ksub, dsub = books.shape
-            dd = (books * books).sum(2)  # (M, ksub), hoisted per task
-            pqm_ = ProductQuantizerModel(codebooks=books) if ht is not None else None
-            pop8 = (
-                np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1)
-                .sum(1)
-                .astype(np.int64)
-            )
-            t3 = np.empty((len(Q_), M, ksub), np.float64)
-            have_t3 = np.zeros(len(Q_), bool)
-            acc: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                qsel = l2q.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                need = qsel[~have_t3[qsel]]
-                if len(need):
-                    Qs = Q_[need].reshape(len(need), M, dsub)
-                    t3[need] = -2.0 * np.einsum("qmd,mkd->qmk", Qs, books)
-                    have_t3[need] = True
-                codes = _pq_code_view(codes, M)
-                i, j = list_no // ksub_c, list_no % ksub_c
-                c = np.concatenate([sub_c[0][i], sub_c[1][j]])
-                # per-LIST precomputed term (lazy — 2^(2b) cells are
-                # never materialized up front)
-                Cs = c.reshape(M, dsub)
-                pct_l = dd + 2.0 * np.einsum("md,mkd->mk", Cs, books)
-                R = Q_[qsel] - c[None, :]
-                coarse = (R * R).sum(1)
-                luts = pct_l[None, :, :] + t3[qsel]
-                D = np.broadcast_to(
-                    coarse[:, None], (len(qsel), len(codes))
-                ).copy()
-                for m in range(M):
-                    D += luts[:, m, codes[:, m].astype(np.int64)]
-                if pqm_ is not None:
-                    # per-list residual query codes → Hamming prune
-                    # (faiss/IndexIVFPQ.h:44 polysemous_ht)
-                    qc = pqm_.encode_np(R)
-                    ham = np.zeros(D.shape, np.int64)
-                    for m in range(M):
-                        ham += pop8[
-                            np.bitwise_xor(qc[:, m][:, None], codes[None, :, m])
-                        ]
-                    # strict keep hd < ht, as the reference (IndexIVFPQ.cpp /
-                    # IndexPQ.cpp `if (hd < ht)`); ht > M*8 keeps everything
-                    D[ham >= ht] = np.inf
-                if list_no not in acc:
-                    acc[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                acc[list_no].push(D, ids)
-            for key, a in acc.items():
-                qidx, nid, nd = a.emit()
-                fin = np.isfinite(nd)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qids_[qsels[key][qidx[fin]]], pa.int64()),
-                        pa.array(nid[fin], pa.int64()),
-                        pa.array(nd[fin], pa.float64()),
-                    ],
-                    names=["qid", "id", "dist"],
-                )
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
+    def _scorer(self, lists=None, polysemous_ht=None) -> "CellScorer":
+        return PQScorer(
+            coarse=self.sub_centroids, books=self.pq.codebooks,
+            ht=polysemous_ht,
         )
 
 
@@ -3794,143 +3388,30 @@ class IVFPQRIndex:
             raise ValueError(
                 "rerank='pqr_codes' needs a refine PQ; train with M_refine"
             )
-        return self._search_pqr_codes(queries, k, nprobe, qid_col, qvec_col)
-
-    def _search_pqr_codes(
-        self, queries: DataFrame, k: int, nprobe: int,
-        qid_col: str, qvec_col: str,
-    ) -> DataFrame:
-        base = self.ivfpq
-        if base.codes is None:
-            raise ValueError("index has no codes table; call train() first")
-        spark = base.codes.sparkSession
-        nlist = len(base.centroids)
-        nprobe = min(nprobe, nlist)
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFPQRIndex.search",
-            d=base.centroids.shape[1],
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: pqr_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        CD = pairwise_distances(Q, base.centroids, "l2")
-        probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe]
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(len(qids)):
-            for c in probes[qi]:
-                list_to_q[int(c)].append(qi)
-        bc = spark.sparkContext.broadcast(
-            (
-                qids, Q, base.centroids, base.pq.codebooks,
-                self.refine_pq.codebooks,
-                {c: np.asarray(v, np.int64) for c, v in list_to_q.items()},
-            )
-        )
-        k_, kf = k, self.k_factor
-        pruned = base.codes.filter(F.col("list_no").isin(probed_lists))
 
-        def scan(batches):
-            import pyarrow as pa
+    @property
+    def codes(self) -> DataFrame | None:
+        """The base IVFPQ codes table (plus ``rcode`` with M_refine)."""
+        return self.ivfpq.codes
 
-            from faiss_spark.kernels import arrow_binary_matrix
+    @property
+    def path(self) -> str | None:
+        return self.ivfpq.path
 
-            qids_, Q_, C, books1, books2, l2q = bc.value
-            pq1 = ProductQuantizerModel(codebooks=books1)
-            pq2 = ProductQuantizerModel(codebooks=books2)
-            M, _, dsub = books1.shape
-            acc: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
+    def _coarse(self) -> "FlatCoarse":
+        return self.ivfpq._coarse()
 
-            def groups():
-                # two binary payloads per row (code, rcode) — same
-                # group-bounds discipline as kernels.arrow_code_groups
-                for b in batches:
-                    if b.num_rows == 0:
-                        continue
-                    lists = np.asarray(
-                        b.column(0).to_numpy(zero_copy_only=False), np.int64
-                    )
-                    ids_all = np.asarray(
-                        b.column(1).to_numpy(zero_copy_only=False), np.int64
-                    )
-                    c1 = arrow_binary_matrix(b.column(2))
-                    c2 = arrow_binary_matrix(b.column(3))
-                    if lists[0] == lists[-1] and (lists == lists[0]).all():
-                        yield int(lists[0]), c1, c2, ids_all
-                        continue
-                    order = np.argsort(lists, kind="stable")
-                    sl = lists[order]
-                    bounds = np.flatnonzero(np.r_[True, sl[1:] != sl[:-1], True])
-                    for st, en in zip(bounds[:-1], bounds[1:]):
-                        rows = order[st:en]
-                        yield int(sl[st]), c1[rows], c2[rows], ids_all[rows]
-
-            for list_no, codes1, codes2, ids in groups():
-                qsel = l2q.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                codes1 = _pq_code_view(codes1, M)
-                codes2 = _pq_code_view(codes2, books2.shape[0])
-                R = Q_[qsel] - C[list_no][None, :]
-                Rs = R.reshape(len(R), M, dsub)
-                luts = (
-                    (Rs * Rs).sum(2)[:, :, None]
-                    + (books1 * books1).sum(2)[None, :, :]
-                    - 2.0 * np.einsum("qmd,mkd->qmk", Rs, books1)
-                )
-                D = np.zeros((len(R), len(codes1)), np.float64)
-                for m in range(M):
-                    D += luts[:, m, codes1[:, m].astype(np.int64)]
-                # per-query ADC shortlist of this chunk
-                s = min(len(codes1), k_ * kf)
-                if s < len(codes1):
-                    short = np.argpartition(D, s - 1, axis=1)[:, :s]
-                else:
-                    short = np.broadcast_to(
-                        np.arange(len(codes1)), (len(R), len(codes1))
-                    )
-                # decode pq1 + refine for the union of shortlisted rows
-                uni = np.unique(short.ravel())
-                Y = pq1.decode_np(codes1[uni]) + pq2.decode_np(codes2[uni])
-                pos = np.full(len(codes1), -1, np.int64)
-                pos[uni] = np.arange(len(uni))
-                # refined distances, shortlist only; everything else +inf
-                DR = np.full_like(D, np.inf)
-                for qi in range(len(R)):
-                    sel = short[qi]
-                    diff = R[qi][None, :] - Y[pos[sel]]
-                    DR[qi, sel] = (diff * diff).sum(1)
-                if list_no not in acc:
-                    acc[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                acc[list_no].push(DR, ids)
-            for key, a in acc.items():
-                qidx, nid, nd = a.emit()
-                keep = np.isfinite(nd)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qids_[qsels[key][qidx[keep]]], pa.int64()),
-                        pa.array(nid[keep], pa.int64()),
-                        pa.array(nd[keep], pa.float64()),
-                    ],
-                    names=["qid", "id", "dist"],
-                )
-
-        cands = pruned.select("list_no", "id", "code", "rcode").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
+    def _scorer(self, lists=None) -> "CellScorer":
+        return PQRScorer(
+            centroids=self.ivfpq.centroids, books=self.ivfpq.pq.codebooks,
+            refine_books=self.refine_pq.codebooks, k_factor=self.k_factor,
         )
 
     def save(self, path: str) -> "IVFPQRIndex":
@@ -4733,132 +4214,31 @@ class IVFAQIndex:
         qid_col: str = "qid",
         qvec_col: str = "vec",
     ) -> DataFrame:
-        """Same partition-pruned plan as IVFSQIndex.search; the scan
-        decodes AQ codes (gather-sum + centroid) before the GEMM. Under
-        an additive coarse, probe selection is the RCQ beam and the
-        per-list base vector is the virtual centroid's reconstruction."""
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        nlist = self.nlist
-        nprobe = min(nprobe, nlist)
-        largest = self.metric in SIMILARITY_METRICS
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFAQIndex.search", d=self.d,
+        """Same plan as IVFSQIndex.search with the AQScorer (gather-sum
+        decode + centroid before the GEMM, or the '_N*' norm estimator).
+        Under an additive coarse, probe selection is the RCQ beam and the
+        per-list base vector is the virtual centroid's reconstruction. A
+        query side past the driver bound auto-falls-back to
+        ``aq_search_preassigned``."""
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: aq_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
+
+    def _coarse(self):
         if self.coarse_q is not None:
-            probes, _ = self.coarse_q.search_np(Q, nprobe)
-        else:
-            CD = pairwise_distances(Q, self.centroids, self.metric)
-            order = np.argsort(-CD if largest else CD, axis=1, kind="stable")
-            probes = order[:, :nprobe]
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        list_to_q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(len(qids)):
-            for c in probes[qi]:
-                list_to_q[int(c)].append(qi)
-        # '_N*' stored-norm estimator (reference AdditiveQuantizer
-        # search_type): rank by ‖q‖² − 2⟨q,x̂⟩ + N(‖x̂‖²) instead of the
-        # exact decoded distance. "none" (ST_LUT_nonorm) is N ≡ 0. IP
-        # metric never uses the norm term (the LUT similarity is ⟨q,x̂⟩ —
-        # identical to the exact path on decoded vectors).
+            return self.coarse_q
+        return FlatCoarse(self.centroids, self.metric)
+
+    def _scorer(self, lists=None) -> "CellScorer":
+        # IP never uses the norm term (the LUT similarity is ⟨q,x̂⟩ —
+        # identical to the exact path on decoded vectors)
         est = self.search_type is not None and self.metric == "l2"
-        bc = spark.sparkContext.broadcast(
-            (
-                qids,
-                Q,
-                {c: np.asarray(v, np.int64) for c, v in list_to_q.items()},
-                self.centroids,
-                self.coarse_q,
-                self.rq.codebooks,
-                self.norm_q if est else None,
-                est,
-            )
-        )
-        metric = self.metric
-        k_ = k
-        pruned = self.codes.filter(F.col("list_no").isin(probed_lists))
-
-        def scan(batches):
-            import pyarrow as pa
-
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, Q_, l2q, C, cq, books, norm_q, est_ = bc.value
-            acc: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                qsel = l2q.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                # AQ decode: gather-sum the M codebook rows + list centroid
-                # (the virtual centroid's reconstruction under an
-                # additive coarse — one decode per probed list)
-                base = (
-                    cq.reconstruct_np(np.asarray([list_no]))[0]
-                    if cq is not None
-                    else C[list_no]
-                )
-                codes = _pq_code_view(codes, books.shape[0])
-                X = np.broadcast_to(
-                    base, (len(codes), len(base))
-                ).astype(np.float64)
-                for m in range(books.shape[0]):
-                    X = X + books[m][codes[:, m]]
-                if list_no not in acc:
-                    acc[list_no] = TopKAccumulator(
-                        len(qsel), k_, metric in SIMILARITY_METRICS
-                    )
-                    if not est_:
-                        acc[list_no].bind_queries(
-                            np.ascontiguousarray(Q_[qsel]), metric
-                        )
-                    qsels[list_no] = qsel
-                if est_:
-                    n_raw = (X * X).sum(1)
-                    n_est = (
-                        norm_q.quantize_np(n_raw)
-                        if norm_q is not None
-                        else np.zeros(len(X))
-                    )
-                    Qs = np.ascontiguousarray(Q_[qsel], np.float64)
-                    D = (
-                        (Qs * Qs).sum(1)[:, None]
-                        - 2.0 * (Qs @ X.T)
-                        + n_est[None, :]
-                    )
-                    acc[list_no].push(D, ids)
-                else:
-                    acc[list_no].push_block(X, ids)
-            for key, a in acc.items():
-                qidx, nid, nd = a.emit()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qids_[qsels[key][qidx]], pa.int64()),
-                        pa.array(nid, pa.int64()),
-                        pa.array(nd, pa.float64()),
-                    ],
-                    names=["qid", "id", "dist"],
-                )
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        sort = [
-            F.col("dist").desc() if largest else F.col("dist").asc(),
-            F.col("id").asc(),
-        ]
-        w = Window.partitionBy("qid").orderBy(*sort)
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
+        return AQScorer(
+            centroids=self.centroids, coarse_q=self.coarse_q,
+            books=self.rq.codebooks, norm_q=self.norm_q if est else None,
+            est=est, metric=self.metric,
         )

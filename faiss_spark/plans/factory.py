@@ -770,6 +770,8 @@ class IndexPlan:
         nq·nlist·d to nq·L·R·d. The list scan itself is identical to the
         exact-assign plan (partition-pruned, broadcast probes)."""
         from faiss_spark.operators.ivf import (
+            FlatScorer,
+            _invert_probes,
             _scan_probed_lists,
             collect_queries_bounded,
             search_preassigned,
@@ -798,7 +800,8 @@ class IndexPlan:
             C, self._cgraph, self._cep, nprobe, nlist, Q
         )
         return _scan_probed_lists(
-            self.index.codes, qids, Q, probes, k, self.metric
+            self.index.codes, qids, Q, _invert_probes(probes), k,
+            FlatScorer(self.metric),
         )
 
     # -- persistence (reference blanket IO property, tests/test_io.py:

@@ -241,6 +241,23 @@ def test_search_preassigned_bucketed_codes_skip_shuffle(emb, queries, tmp_path):
     assert "Bucketed: true" in plan(res2, "simple")
     assert sorted((r.qid, r.id, round(r.dist, 9)) for r in res2.collect()) == expect
 
+    # the coded lists ride the same cogroup: IVFPQIndex.save_bucketed →
+    # pq_search_preassigned drops the codes-side Exchange the same way
+    from faiss_spark.operators.ivf import IVFPQIndex, pq_search_preassigned
+
+    pq = IVFPQIndex.train(emb, nlist=8, M=8, seed=7, niter=5).add(emb)
+    base = pq_search_preassigned(pq, queries, 5, nprobe=2)
+    p0 = plan(base, "simple")
+    expect = sorted((r.qid, r.id, round(r.dist, 9)) for r in base.collect())
+    pq.save_bucketed(str(tmp_path / "pqbk"), nbuckets=8)
+    res = pq_search_preassigned(pq, queries, 5, nprobe=2)
+    p1 = plan(res, "simple")
+    assert p1.count("Exchange hashpartitioning(list_no") == (
+        p0.count("Exchange hashpartitioning(list_no") - 1
+    ), p1
+    assert "Bucketed: true" in p1, p1
+    assert sorted((r.qid, r.id, round(r.dist, 9)) for r in res.collect()) == expect
+
 
 def test_search_preassigned_hot_cell_subshards(emb, queries, tmp_path):
     """A cell above max_cell_rows must split into >1 bounded sub-shard

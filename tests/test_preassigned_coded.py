@@ -112,6 +112,21 @@ def test_aq_search_preassigned_equals_driver(vectors, queries, monkeypatch):
         assert rows(aq_search_preassigned(idx, queries, 5, nprobe=nprobe)) == rows(
             idx.search(queries, 5, nprobe=nprobe)
         ), nprobe
+    # the '_N*' stored-norm estimator branch and an RCQ coarse quantizer
+    # (beam probes, virtual-centroid decode) score identically too
+    from faiss_spark.operators.codecs import ResidualCoarseQuantizer
+
+    cq = ResidualCoarseQuantizer(M=2, nbits=2, seed=42).fit(vectors)
+    qint8 = IVFAQIndex.train(
+        vectors, nlist=8, M=4, seed=42, niter=5, search_type="qint8"
+    ).add(vectors)
+    assert qint8.norm_q is not None
+    rcq = IVFAQIndex.train(
+        vectors, nlist=cq.nlist, M=4, seed=42, coarse_q=cq
+    ).add(vectors)
+    for name, v in (("qint8", qint8), ("rcq", rcq)):
+        got = rows(aq_search_preassigned(v, queries, 5, nprobe=3))
+        assert got and got == rows(v.search(queries, 5, nprobe=3)), name
     direct = rows(aq_search_preassigned(idx, queries, 5, nprobe=3))
     calls = _spy_fallback(monkeypatch, "aq_search_preassigned")
     assert rows(idx.search(queries, 5, nprobe=3)) == direct and direct

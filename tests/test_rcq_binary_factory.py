@@ -174,6 +174,55 @@ def test_search_with_parameters_stats(vectors, queries):
     assert s1.nq == sF.nq == queries.count()
 
 
+@pytest.mark.parametrize("family", ["ivf", "rcq", "sq", "pq"])
+def test_search_with_parameters_any_family(vectors, queries, family):
+    """search_with_parameters runs each family through its own probe
+    function and cell scorer: without a max_codes budget its rows equal
+    index.search, and stats.ndis counts one distance per (query, probed
+    code), i.e. the summed sizes of every query's probed lists."""
+    from faiss_spark.kernels import pairwise_distances
+    from faiss_spark.operators.ivf import (
+        IVFIndex,
+        IVFPQIndex,
+        IVFSQIndex,
+        search_with_parameters,
+    )
+
+    if family == "ivf":
+        idx = IVFIndex.train(vectors, nlist=4, seed=42, niter=5)
+    elif family == "rcq":
+        idx = IVFRCQIndex.train(vectors, M=2, nbits=1, seed=42)
+    elif family == "sq":
+        idx = IVFSQIndex.train(vectors, nlist=4, seed=42, niter=5)
+    else:
+        idx = IVFPQIndex.train(vectors, nlist=4, M=8, seed=42, niter=5)
+    idx.add(vectors)
+    idx.codes = idx.codes.localCheckpoint(eager=True)
+
+    def rows(df):
+        return sorted(
+            (r["qid"], r["rank"], r["id"], round(r["dist"], 6))
+            for r in df.collect()
+        )
+
+    res, st = search_with_parameters(idx, queries, 5, nprobe=2)
+    got = rows(res)
+    assert got and got == rows(idx.search(queries, 5, nprobe=2))
+
+    Q = np.stack(queries.orderBy("qid").toPandas()["vec"]).astype(np.float64)
+    if family == "rcq":
+        probes = idx.cq.search_np(Q, 2)[0]
+    else:
+        D = pairwise_distances(Q, idx.centroids, "l2")
+        probes = np.argsort(D, axis=1, kind="stable")[:, :2]
+    sizes = {
+        r["list_no"]: r["count"]
+        for r in idx.codes.groupBy("list_no").count().collect()
+    }
+    assert st.nq == len(Q)
+    assert st.ndis == sum(sizes.get(int(c), 0) for p in probes for c in p)
+
+
 def test_ivf_range_search_full_probe_exact(vectors, queries):
     """nprobe=nlist IVF range search == flat range_search (reference
     IndexIVF::range_search, faiss/IndexIVF.cpp:715) and stats populate."""

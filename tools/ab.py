@@ -31,7 +31,7 @@ import __spark_entry__ as m
 import bench
 from faiss_spark.session import get_spark
 sf = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
-cpus = int(os.environ.get('SPARK_GRAFT_CPUS', '32'))
+cpus = int(os.environ.get('SPARK_GRAFT_CPUS', len(os.sched_getaffinity(0))))
 spark = get_spark('ab_probe', cpus=cpus)
 names = json.loads(os.environ['AB_QUERIES'])
 qs = m.queries()

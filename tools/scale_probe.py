@@ -22,9 +22,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import _synth_vecs  # noqa: E402
-from faiss_spark.session import get_spark  # noqa: E402
+from faiss_spark.session import default_cpus, get_spark  # noqa: E402
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 D = 64
 
 
@@ -698,7 +698,7 @@ def main() -> None:
     os.environ.setdefault(
         "SPARK_GRAFT_INITIAL_PARTITIONS", str(max(8 * CPUS, 256))
     )
-    spark = get_spark("scale_probe")
+    spark = get_spark("scale_probe", cpus=CPUS)
     small, big = (600_000, 3_000_000) if not quick else (60_000, 300_000)
     nd_small, nd_big = (1_000_000, 5_000_000) if not quick else (20_000, 100_000)
     probes = {
