@@ -136,14 +136,22 @@ def arrow_i64(col) -> np.ndarray:
 
 
 def arrow_payload_matrix(col) -> np.ndarray:
-    """A codes-table payload column as a matrix: binary codes become an
-    (n, w) uint8 view (arrow_binary_matrix), list<float> vectors an
-    (n, d) float64 matrix (arrow_list_matrix)."""
+    """A codes- or probe-table payload column as numpy: binary codes
+    become an (n, w) uint8 view (arrow_binary_matrix), list<float>
+    vectors an (n, d) float64 matrix, list<int> code words an (n, w)
+    int64 matrix (64-bit words do not survive float64), and scalar
+    columns a 1-D array."""
     import pyarrow as pa
 
-    if pa.types.is_binary(col.type):
+    t = col.type
+    if pa.types.is_binary(t):
         return arrow_binary_matrix(col)
-    return arrow_list_matrix(col)
+    if pa.types.is_integer(t) or pa.types.is_floating(t):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        return col.to_numpy(zero_copy_only=False)
+    ints = pa.types.is_integer(t.value_type)
+    return arrow_list_matrix(col, np.int64 if ints else np.float64)
 
 
 def arrow_list_groups(batches):
@@ -167,13 +175,6 @@ def arrow_list_groups(batches):
         for s, e in zip(bounds[:-1], bounds[1:]):
             rows = order[s:e]
             yield int(sl[s]), tuple(c[rows] for c in cols), ids[rows]
-
-
-def arrow_code_groups(batches):
-    """(list_no, codes (n, w) uint8, ids int64) per-list groups from
-    ``mapInArrow`` batches of ``(list_no, id, code binary)``."""
-    for list_no, (codes,), ids in arrow_list_groups(batches):
-        yield list_no, codes, ids
 
 
 def pairwise_distances(

@@ -398,7 +398,7 @@ class BinaryIVFIndex:
             self.codes = out
         return self
 
-    def _write_artifacts(self, spark, path: str) -> None:
+    def _save_artifact(self, spark, path: str) -> None:
         import os as _os
 
         from faiss_spark.sources import fsio
@@ -427,7 +427,7 @@ class BinaryIVFIndex:
         self.codes.repartition("list_no").write.mode("overwrite").partitionBy(
             "list_no"
         ).parquet(path)
-        self._write_artifacts(spark, path)
+        self._save_artifact(spark, path)
         self.codes = spark.read.parquet(path)
         self.path = path
         return self
@@ -439,42 +439,17 @@ class BinaryIVFIndex:
         hash grouping, so ``binary_search_preassigned`` /
         ``binary_range_search_preassigned`` cogroup straight off the
         files with ZERO corpus-side exchange per big-batch search."""
-        import hashlib as _hashlib
-        import os as _os
+        from faiss_spark.operators.ivf import _write_bucketed_codes
 
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        if nbuckets is None:
-            nbuckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        name = "bivf_codes_" + _hashlib.md5(path.encode()).hexdigest()[:12]
-        cols = self.codes.select("list_no", "id", "code")
-        ddl = cols._jdf.schema().toDDL()
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            cols.repartition(nbuckets, "list_no")
-            .write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .bucketBy(nbuckets, "list_no")
-            .saveAsTable(name)
+        return _write_bucketed_codes(
+            self, path, ("list_no", "id", "code"), "bivf_codes_", nbuckets
         )
-        self._write_artifacts(spark, path)
-        from faiss_spark.sources import fsio
-
-        fsio.write_json(
-            spark,
-            _os.path.join(path, "_bucket_meta.json"),
-            {"nbuckets": int(nbuckets), "table": name, "ddl": ddl},
-        )
-        self.codes = spark.table(name)
-        self.path = path
-        return self
 
     @staticmethod
     def load(spark, path: str) -> "BinaryIVFIndex":
         import os as _os
 
+        from faiss_spark.operators.ivf import _attach_codes_table
         from faiss_spark.sources import fsio
 
         meta = fsio.read_json(spark, _os.path.join(path, "_bivf_meta.json"))
@@ -482,15 +457,7 @@ class BinaryIVFIndex:
             centroid_words=fsio.read_npy(spark, _os.path.join(path, "_bivf_centroid_words.npy")),
             nbits=meta["nbits"],
         )
-        bucket_meta = _os.path.join(path, "_bucket_meta.json")
-        if fsio.exists(spark, bucket_meta):
-            from faiss_spark.operators.ivf import IVFIndex
-
-            idx.codes = IVFIndex._bucketed_table(
-                spark, path, fsio.read_json(spark, bucket_meta)
-            )
-        else:
-            idx.codes = spark.read.parquet(path)
+        idx.codes = _attach_codes_table(spark, path)
         idx.path = path
         if meta.get("coarse_R") is not None:
             idx.build_coarse_graph(R=meta["coarse_R"])
@@ -691,7 +658,7 @@ def binary_search_preassigned(
     the tiled TopKAccumulator: squared L2 on 0/1 vectors IS Hamming
     (integer-exact in f64), so distances match the driver-planned
     ``hamming_expr`` scan bit for bit."""
-    from faiss_spark.operators.ivf import cogrouped_cell_scan
+    from faiss_spark.operators.ivf import _window_topk, cogrouped_cell_scan
 
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
@@ -726,12 +693,7 @@ def binary_search_preassigned(
         return _cand_table(arrow_i64(ptab.column("qid"))[qidx], nid, nd)
 
     cands = cogrouped_cell_scan(index, probes, codes, max_cell_rows, scan_cell)
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _window_topk(cands, k, largest=False)
 
 
 def binary_range_search_preassigned(

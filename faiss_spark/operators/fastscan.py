@@ -21,43 +21,56 @@ The physical half (register layout) is out of scope per SURVEY §2.B —
 numpy's vectorized gather over Arrow batches is this engine's vector
 unit, and Tungsten/whole-stage-codegen owns the layout above it.
 
-Scale shape: LUT construction is O(nq · nprobe · M · ksub · dsub) on the
-driver (ksub is 16 for 4-bit codes — a few MB even at nq=10k), broadcast
-once; the scan over the codes table is map-only over (pruned) partitions
-with per-worker top-k partials, identical to the ADC scan plans pinned in
-tests/test_plans.py.
+Scale shape: the IVF indexes run on the shared IVF cell scan
+(ivf.py): FastScanScorer is their InvertedListScanner. Each query's
+LUTs are quantized once per search, jointly over its probes, where the
+probes are assigned: on the driver in the driver plan (uint8 tables of
+nq · nprobe · M · ksub bytes, broadcast), or in the probe-assignment
+map of the cogroup plan, where each probe row carries its LUT bytes.
+The scan over the pruned codes table is then pure saturating uint16
+arithmetic with per-list top-k partials and the shared window merge.
+The flat pq_fastscan_search / aq_fastscan_search scans broadcast one
+LUT per query over the whole codes table.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, Window
+from pyspark.sql import DataFrame, functions as F
 
-from faiss_spark.kernels import TopKAccumulator, as_matrix, pairwise_distances
-from faiss_spark.operators.codecs import ProductQuantizerModel
-from faiss_spark.operators.ivf import IVFPQIndex, collect_queries_bounded
+from faiss_spark.kernels import arrow_binary_matrix, arrow_i64, as_matrix
+from faiss_spark.operators.cluster import KMeans
+from faiss_spark.operators.codecs import (
+    LocalSearchQuantizerModel,
+    ProductAdditiveQuantizer,
+    ProductAdditiveQuantizerModel,
+    ProductQuantizerModel,
+    ResidualQuantizer,
+    ResidualQuantizerModel,
+    _kmeans_np,
+    _map_codec,
+    _sampled_matrix,
+)
+from faiss_spark.operators.ivf import (
+    _CAND_SCHEMA,
+    _SCRATCH,
+    CellScorer,
+    FlatCoarse,
+    IVFPQIndex,
+    _cand_table,
+    _cogroup_search,
+    _driver_search,
+    _window_topk,
+    collect_queries_bounded,
+)
+from faiss_spark.sources import fsio
 
 
 # ------------------------------------------------------------ quantization
-
-
-def _emit_group_candidates(qids, accs, qsels):
-    """RecordBatch candidate emitter shared by the grouped fast-scan
-    scans (one batch per touched list's accumulator)."""
-    import pyarrow as pa
-
-    for key, acc in accs.items():
-        qidx, nid, nd = acc.emit()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids[qsels[key][qidx]], pa.int64()),
-                pa.array(nid, pa.int64()),
-                pa.array(nd, pa.float64()),
-            ],
-            names=["qid", "id", "dist"],
-        )
 
 
 def quantize_lut_flat(luts: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -67,20 +80,9 @@ def quantize_lut_flat(luts: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndar
 
     luts: (nq, M, ksub) float. Returns (lutq uint8 (nq, M, ksub),
     a (nq,), b (nq,)) with ``true_lut[m, j] ≈ lutq[m, j] / a + min_m``
-    and ``true_dist ≈ acc / a + b``.
+    and ``true_dist ≈ acc / a + b``. The AQ quantizer without norm rows.
     """
-    luts = np.asarray(luts, np.float64)
-    mins = luts.min(axis=2)  # (nq, M)
-    spans = luts.max(axis=2) - mins
-    max_span_lut = spans.max(axis=1)
-    max_span_dis = spans.sum(axis=1)
-    with np.errstate(divide="ignore"):
-        a = np.minimum(255.0 / max_span_lut, 65535.0 / max_span_dis)
-    a = np.where(np.isfinite(a), a, 1.0)  # degenerate all-constant LUTs
-    b = mins.sum(axis=1)
-    lutq = np.floor((luts - mins[:, :, None]) * a[:, None, None] + 0.5)
-    np.clip(lutq, 0.0, 255.0, out=lutq)
-    return lutq.astype(np.uint8), a, b
+    return aq_quantize_lut(luts, M_norm=0, norm_scale=1)
 
 
 def quantize_lut_ivf(
@@ -166,55 +168,40 @@ def pq_fastscan_search(
         raise ValueError(
             f"fast-scan requires 4-bit codes (ksub ≤ 16), got ksub={model.ksub}"
         )
-    spark = codes_df.sparkSession
     qids, Q = collect_queries_bounded(
         queries, qid_col, qvec_col, "pq_fastscan_search",
         d=model.codebooks.shape[0] * model.codebooks.shape[2],
     )
-    luts = np.stack([model.distance_table(q) for q in Q])  # (nq, M, ksub)
-    lutq, a, b = quantize_lut_flat(luts)
-    bc = spark.sparkContext.broadcast((qids, lutq, a, b))
-    k_ = k
+    scorer = PQ4FastScanScorer(
+        ksub=model.ksub, books=model.codebooks, by_residual=False
+    )
+    return _flat_lut_search(codes_df, qids, Q, k, scorer)
+
+
+def _flat_lut_search(codes_df, qids, Q, k, scorer) -> DataFrame:
+    """The flat (non-IVF) fast-scan plan: the whole codes table is one
+    cell probed by every query. ``scorer`` quantizes one LUT per query
+    on the driver (its by_residual=False payload), the rows broadcast,
+    one map-only pass keeps per-task top-k partials and the window
+    merges them."""
+    rep = np.arange(len(qids))
+    rows = scorer.query_payload(Q, rep, np.zeros_like(rep))
+    bc = codes_df.sparkSession.sparkContext.broadcast((qids, rows, scorer))
 
     def scan(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_binary_matrix
-
-        qids_, lutq_, a_, b_ = bc.value
-        nq = len(qids_)
-        acc = TopKAccumulator(nq, k_, largest=False)
+        qids_, rows_, scorer_ = bc.value
+        cell = scorer_.start(rows_, k).bind(0, np.arange(len(qids_)))
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes = arrow_binary_matrix(batch.column(1))
-            D16 = _saturating_lut_sum(lutq_, codes)
-            est = D16 / a_[:, None] + b_[:, None]
-            acc.push(
-                est,
-                np.asarray(
-                    batch.column(0).to_numpy(zero_copy_only=False), np.int64
-                ),
-            )
-        qidx, nid, nd = acc.emit()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids_[qidx], pa.int64()),
-                pa.array(nid, pa.int64()),
-                pa.array(nd, pa.float64()),
-            ],
-            names=["qid", "id", "dist"],
-        )
+            if batch.num_rows:
+                cell.push(
+                    (arrow_binary_matrix(batch.column(1)),),
+                    arrow_i64(batch.column(0)),
+                )
+        qidx, nid, nd = cell.emit()
+        yield from _cand_table(qids_[qidx], nid, nd).to_batches()
 
-    cands = codes_df.select("id", "code").mapInArrow(
-        scan, schema="qid bigint, id bigint, dist double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_)
-        .select("qid", "id", "dist", "rank")
-    )
+    cands = codes_df.select("id", "code").mapInArrow(scan, schema=_CAND_SCHEMA)
+    return _window_topk(cands, k, largest=False)
 
 
 # ------------------------------------------------------------ IVFPQ scan
@@ -270,9 +257,6 @@ class IVFPQFastScanIndex:
             )
         # non-residual: coarse k-means for pruning only; PQ trained on
         # the RAW sample (reference train_encoder with by_residual=false)
-        from faiss_spark.operators.cluster import KMeans
-        from faiss_spark.operators.codecs import _kmeans_np, _sampled_matrix
-
         km = KMeans(k=nlist, niter=niter, seed=seed).fit(
             vectors, vec_col=vec_col
         )
@@ -350,29 +334,33 @@ class IVFPQFastScanIndex:
         """write_index: the IVFPQ layout plus the by_residual flag —
         reload reproduces the same LUT mode (per-probe residual LUTs vs
         the shared flat LUT)."""
-        import os as _os
-
-        from faiss_spark.sources import fsio
-
         self.base.save(path)
         fsio.write_json(
             self.base.codes.sparkSession,
-            _os.path.join(path, "_ivfpqfs_meta.json"),
+            os.path.join(path, "_ivfpqfs_meta.json"),
             {"by_residual": bool(self.by_residual)},
         )
         return self
 
     @staticmethod
     def load(spark, path: str) -> "IVFPQFastScanIndex":
-        import os as _os
-
-        from faiss_spark.sources import fsio
-
-        meta = fsio.read_json(spark, _os.path.join(path, "_ivfpqfs_meta.json"))
+        meta = fsio.read_json(spark, os.path.join(path, "_ivfpqfs_meta.json"))
         return IVFPQFastScanIndex(
             base=IVFPQIndex.load(spark, path),
             by_residual=meta["by_residual"],
         )
+
+    @property
+    def codes(self) -> DataFrame | None:
+        return self.base.codes
+
+    @codes.setter
+    def codes(self, df: DataFrame | None) -> None:
+        self.base.codes = df
+
+    @property
+    def path(self) -> str | None:
+        return self.base.path
 
     def search(
         self,
@@ -382,160 +370,30 @@ class IVFPQFastScanIndex:
         qid_col: str = "qid",
         qvec_col: str = "vec",
     ) -> DataFrame:
-        base = self.base
-        if base.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = base.codes.sparkSession
-        C = base.centroids
-        books = base.pq.codebooks
-        M, ksub, dsub = books.shape
-        if ksub > 16:
-            raise ValueError(f"fast-scan requires 4-bit codes, got ksub={ksub}")
-        nlist = len(C)
-        nprobe = min(nprobe, nlist)
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFPQFastScanIndex.search",
-            d=C.shape[1],
+        """IVF fast-scan k-NN in the shared driver plan (ivf.py): probes
+        and quantized LUTs on the driver, then PQ4FastScanScorer over
+        the probed lists. A query side past the driver bound
+        auto-falls-back to ``fastscan_search_preassigned``."""
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: fastscan_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        nq = len(Q)
-        CD = pairwise_distances(Q, C, "l2")
-        probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe]  # (nq, nprobe)
-        if not self.by_residual:
-            return self._search_flat_lut(spark, qids, Q, probes, k)
 
-        # Residual LUTs per (query, probe), quantized in QUERY BLOCKS so
-        # only the uint8 tables persist on the driver: the float64
-        # (blk, nprobe, M, ksub) LUT tensor and (blk, nprobe, d) residuals
-        # are scratch per block (at nq=10k, nprobe=16 the full-tensor form
-        # would hold ~330 MB; the kept lutq/biasq are ~nq·nprobe·M·ksub
-        # bytes — a few MB)
-        lutq = np.empty((nq, nprobe, M, ksub), np.uint8)
-        biasq = np.empty((nq, nprobe), np.uint16)
-        a = np.empty(nq)
-        b = np.empty(nq)
-        zero_bias = np.zeros(nprobe)
-        blk = 256
-        for s in range(0, nq, blk):
-            e = min(nq, s + blk)
-            R = Q[s:e, None, :] - C[probes[s:e]]  # (blk, nprobe, d)
-            Rs = R.reshape(e - s, nprobe, M, dsub)
-            luts = (
-                (Rs * Rs).sum(3)[:, :, :, None]
-                + (books * books).sum(2)[None, None, :, :]
-                - 2.0 * np.einsum("qpmd,mkd->qpmk", Rs, books)
+    def _coarse(self) -> FlatCoarse:
+        return self.base._coarse()
+
+    def _scorer(self, lists=None) -> "PQ4FastScanScorer":
+        books = self.base.pq.codebooks
+        if books.shape[1] > 16:
+            raise ValueError(
+                f"fast-scan requires 4-bit codes, got ksub={books.shape[1]}"
             )
-            for qi in range(s, e):
-                lutq[qi], biasq[qi], a[qi], b[qi] = quantize_lut_ivf(
-                    luts[qi - s], zero_bias
-                )
-
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        l2q: dict[int, list[tuple[int, int]]] = {c: [] for c in probed_lists}
-        for qi in range(nq):
-            for j, c in enumerate(probes[qi]):
-                l2q[int(c)].append((qi, j))
-        l2q_np = {
-            c: (
-                np.asarray([p[0] for p in v], np.int64),
-                np.asarray([p[1] for p in v], np.int64),
-            )
-            for c, v in l2q.items()
-        }
-        bc = spark.sparkContext.broadcast((qids, lutq, biasq, a, b, l2q_np))
-        k_ = k
-        pruned = base.codes.filter(F.col("list_no").isin(probed_lists))
-
-        def scan(batches):
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, lutq_, biasq_, a_, b_, l2q_ = bc.value
-            accs: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                sel = l2q_.get(list_no)
-                if sel is None or len(sel[0]) == 0:
-                    continue
-                qsel, jsel = sel
-                D16 = _saturating_lut_sum(
-                    lutq_[qsel, jsel], codes, init=biasq_[qsel, jsel]
-                )
-                est = D16 / a_[qsel][:, None] + b_[qsel][:, None]
-                if list_no not in accs:
-                    accs[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                accs[list_no].push(est, ids)
-            yield from _emit_group_candidates(qids_, accs, qsels)
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
-        )
-
-    def _search_flat_lut(self, spark, qids, Q, probes, k):
-        """Non-residual scan: ONE quantize_lut_flat LUT per query shared
-        across its probes (the reference's by_residual=false branch) —
-        identical arithmetic to pq_fastscan_search, restricted to the
-        probed partitions."""
-        nq = len(Q)
-        # LUT via the SAME distance_table arithmetic as pq_fastscan_search
-        # (fastscan.py pq path / ProductQuantizerModel.distance_table):
-        # the full-probe == flat-scan bit-identity depends on IDENTICAL
-        # floats entering uint8 quantization — an algebraically-equal
-        # expanded form (|q|²+|c|²−2⟨q,c⟩) can land a value on the other
-        # side of a bin boundary (ADVICE r7).
-        luts = np.stack([self.base.pq.distance_table(q) for q in Q])
-        lutq, a, b = quantize_lut_flat(luts)
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        l2q: dict[int, list[int]] = {c: [] for c in probed_lists}
-        for qi in range(nq):
-            for c in probes[qi]:
-                l2q[int(c)].append(qi)
-        l2q_np = {c: np.asarray(v, np.int64) for c, v in l2q.items()}
-        bc = spark.sparkContext.broadcast((qids, lutq, a, b, l2q_np))
-        k_ = k
-        pruned = self.base.codes.filter(F.col("list_no").isin(probed_lists))
-
-        def scan(batches):
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, lutq_, a_, b_, l2q_ = bc.value
-            accs: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                qsel = l2q_.get(list_no)
-                if qsel is None or len(qsel) == 0:
-                    continue
-                D16 = _saturating_lut_sum(lutq_[qsel], codes)
-                est = D16 / a_[qsel][:, None] + b_[qsel][:, None]
-                if list_no not in accs:
-                    accs[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                accs[list_no].push(est, ids)
-            yield from _emit_group_candidates(qids_, accs, qsels)
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
+        return PQ4FastScanScorer(
+            ksub=books.shape[1], centroids=self.base.centroids, books=books,
+            by_residual=self.by_residual,
         )
 
 
@@ -552,133 +410,113 @@ def fastscan_search_preassigned(
     search_preassigned twin of IVFPQFastScanIndex (reference
     contrib/ivf_tools.py pattern over faiss/IndexIVFPQFastScan.h).
 
-    Fast-scan's LUTs are quantized PER QUERY (by_residual: jointly over
-    the query's probes so distances stay comparable in the merge,
-    quantize_lut.cpp:195), so the distributed shape quantizes inside
-    the probe-assignment map — each (qid, list_no) probe row carries
-    its uint8 LUT bytes (M·ksub ≈ 128 B at 4-bit PQ8), bias, and the
-    per-query (a, b) dequantization constants through the cogroup; the
-    per-cell scan is then pure ``_saturating_lut_sum`` against the
-    cell's codes with no codebook state at all. Arithmetic is the
-    driver scan's bit for bit (same LUT floats entering the same uint8
-    quantization, same saturating accumulation), for both by_residual
+    The probe-assignment map quantizes each query's LUTs once, jointly
+    over its probes (PQ4FastScanScorer.query_payload), and every
+    (qid, list_no) probe row carries its uint8 LUT bytes, bias and
+    (a, b) through the cogroup; each cell then runs the same scorer as
+    the driver plan, so results are identical for both by_residual
     modes."""
-    from faiss_spark.operators.ivf import (
-        _cand_table,
-        _empty_cand_table,
-        _window_topk,
-        cogrouped_cell_scan,
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows
     )
 
-    base = index.base
-    if base.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    C0 = base.centroids
-    books0 = base.pq.codebooks
-    M, ksub, dsub = books0.shape
-    if ksub > 16:
-        raise ValueError(f"fast-scan requires 4-bit codes, got ksub={ksub}")
-    nprobe_ = min(nprobe, len(C0))
-    by_res = index.by_residual
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((C0, books0))
-    k_ = k
 
-    def assign_probes(batches):
-        import pyarrow as pa
+# ------------------------------------------------------ IVF cell scorers
 
-        from faiss_spark.kernels import arrow_id_vec_blocks
 
-        C, books = bc.value
-        pqm = ProductQuantizerModel(codebooks=books)
-        zero_bias = np.zeros(nprobe_)
-        for qids, Q, _ in arrow_id_vec_blocks(batches):
-            nq = len(Q)
-            CD = pairwise_distances(Q, C, "l2")
-            probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-            if by_res:
-                lutq = np.empty((nq, nprobe_, M, ksub), np.uint8)
-                biasq = np.empty((nq, nprobe_), np.uint16)
-                a = np.empty(nq)
-                b = np.empty(nq)
-                blk = 256  # float LUT tensor stays scratch per block
-                for s in range(0, nq, blk):
-                    e = min(nq, s + blk)
-                    R = Q[s:e, None, :] - C[probes[s:e]]
-                    Rs = R.reshape(e - s, nprobe_, M, dsub)
-                    luts = (
-                        (Rs * Rs).sum(3)[:, :, :, None]
-                        + (books * books).sum(2)[None, None, :, :]
-                        - 2.0 * np.einsum("qpmd,mkd->qpmk", Rs, books)
-                    )
-                    for qi in range(s, e):
-                        lutq[qi], biasq[qi], a[qi], b[qi] = quantize_lut_ivf(
-                            luts[qi - s], zero_bias
-                        )
-            else:
-                # one flat LUT per query shared across its probes — the
-                # same distance_table arithmetic as the driver path (an
-                # algebraically-equal form can flip a uint8 bin)
-                luts = np.stack([pqm.distance_table(q) for q in Q])
-                lut1, a, b = quantize_lut_flat(luts)
-                lutq = np.repeat(lut1[:, None, :, :], nprobe_, axis=1)
-                biasq = np.zeros((nq, nprobe_), np.uint16)
-            rep = np.repeat(np.arange(nq), nprobe_)
-            lut_rows = lutq.reshape(nq * nprobe_, M * ksub)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    pa.array(probes.astype(np.int32).ravel(), pa.int32()),
-                    pa.array(list(map(bytes, lut_rows)), pa.binary()),
-                    pa.array(biasq.ravel().astype(np.int32), pa.int32()),
-                    pa.array(a[rep], pa.float64()),
-                    pa.array(b[rep], pa.float64()),
-                ],
-                names=["qid", "list_no", "lut", "bias", "a", "b"],
+@dataclass
+class FastScanScorer(CellScorer):
+    """4-bit fast-scan lists in the shared IVF cell scan (ivf.py). A
+    query row is one probe's quantized LUT, bias and (a, b), built by
+    the subclass's ``query_payload`` once per search, jointly over each
+    query's probes (quantize_lut.cpp:195 — distances from different
+    lists must stay comparable in the merge). A cell scores its codes
+    as the saturating uint16 LUT sum de-quantized to ``acc / a + b``,
+    plus the ‖q‖² addend when the payload carries one (AQ). ``weights``
+    are the AQ norm-row multiplicities (NormTableScaler)."""
+
+    ksub: int = 16
+    cols = ("code",)
+    payload = (
+        ("lut", "binary"), ("bias", "int"), ("a", "double"), ("b", "double"),
+    )
+    weights = None
+
+    def set_list(self, acc, list_no, qsel):
+        lut, bias, a, b, *qsq = (c[qsel] for c in self.Q)
+        lutq = lut.reshape(len(qsel), -1, self.ksub)
+        w = self.weights
+        chunk = max(16, _SCRATCH // max(1, len(qsel)))
+
+        def push(cols, ids):
+            # saturation is per element, so column chunks keep the
+            # uint16 chain bit-equal while bounding the uint32 scratch
+            for s in range(0, len(ids), chunk):
+                D16 = _saturating_lut_sum(
+                    lutq, cols[0][s : s + chunk], init=bias, row_weights=w
+                )
+                est = D16 / a[:, None] + b[:, None]
+                if qsq:
+                    est += qsq[0][:, None]
+                acc.push(est, ids[s : s + chunk])
+
+        return push
+
+
+def _query_starts(rep: np.ndarray, nq: int) -> np.ndarray:
+    """Probe-row bounds per query: query qi owns rows
+    starts[qi]:starts[qi + 1] (`_flat_probes` rows are row-major)."""
+    return np.searchsorted(rep, np.arange(nq + 1))
+
+
+@dataclass
+class PQ4FastScanScorer(FastScanScorer):
+    """IVFPQFastScanIndex rows. by_residual: per-probe residual LUTs,
+    quantized jointly per query with quantize_lut_ivf. by_residual=False:
+    ONE quantize_lut_flat LUT per query shared by its probes."""
+
+    centroids: np.ndarray = None
+    books: np.ndarray = None  # (M, ksub, dsub)
+    by_residual: bool = True
+
+    def query_payload(self, Q, rep, cells):
+        books = self.books
+        if not self.by_residual:
+            # pq_fastscan_search's LUT arithmetic (distance_table): the
+            # full-probe == flat-scan identity needs IDENTICAL floats
+            # entering the uint8 quantization — an algebraically-equal
+            # expanded form can land on the other side of a bin boundary
+            pqm = ProductQuantizerModel(codebooks=books)
+            lutq, a, b = quantize_lut_flat(
+                np.stack([pqm.distance_table(q) for q in Q])
             )
-
-    q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
-    )
-    probes_df = q.mapInArrow(
-        assign_probes,
-        schema="qid bigint, list_no int, lut binary, bias int, a double, b double",
-    )
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import arrow_binary_matrix, arrow_i64
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        qids_ = arrow_i64(ptab.column("qid"))
-        lutq = arrow_binary_matrix(ptab.column("lut")).reshape(-1, M, ksub)
-        bias = arrow_i64(ptab.column("bias")).astype(np.uint16)
-        a_ = np.asarray(
-            ptab.column("a").combine_chunks().to_numpy(zero_copy_only=False),
-            np.float64,
-        )
-        b_ = np.asarray(
-            ptab.column("b").combine_chunks().to_numpy(zero_copy_only=False),
-            np.float64,
-        )
-        codes = arrow_binary_matrix(ctab.column("code"))
-        ids = arrow_i64(ctab.column("id"))
-        acc = TopKAccumulator(len(qids_), k_, largest=False)
-        # saturation is per-element, so column-chunking the codes keeps
-        # the uint16 chain bit-equal while bounding the uint32 scratch
-        chunk = max(16, (1 << 22) // max(1, len(qids_)))
-        for s in range(0, len(ids), chunk):
-            D16 = _saturating_lut_sum(
-                lutq, codes[s:s + chunk], init=bias if by_res else None
+            return (
+                lutq.reshape(len(Q), -1)[rep], np.zeros(len(rep), np.uint16),
+                a[rep], b[rep],
             )
-            est = D16 / a_[:, None] + b_[:, None]
-            acc.push(est, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids_[qidx], nid, nd)
-
-    codes = base.codes.select("list_no", "id", "code")
-    cands = cogrouped_cell_scan(base, probes_df, codes, max_cell_rows, scan_cell)
-    return _window_topk(cands, k, largest=False)
+        M, ksub, dsub = books.shape
+        bb = (books * books).sum(2)
+        lutq = np.empty((len(rep), M, ksub), np.uint8)
+        biasq = np.empty(len(rep), np.uint16)
+        a, b = np.empty(len(Q)), np.empty(len(Q))
+        starts = _query_starts(rep, len(Q))
+        blk = 256  # the float LUT tensor stays scratch per query block
+        for q0 in range(0, len(Q), blk):
+            q1 = min(len(Q), q0 + blk)
+            r0, r1 = starts[q0], starts[q1]
+            R = Q[rep[r0:r1]] - self.centroids[cells[r0:r1]]
+            Rs = R.reshape(r1 - r0, M, dsub)
+            luts = (
+                (Rs * Rs).sum(2)[:, :, None]
+                + bb[None, :, :]
+                - 2.0 * np.einsum("rmd,mkd->rmk", Rs, books)
+            )
+            for qi in range(q0, q1):
+                s, e = starts[qi], starts[qi + 1]
+                lutq[s:e], biasq[s:e], a[qi], b[qi] = quantize_lut_ivf(
+                    luts[s - r0 : e - r0], np.zeros(e - s)
+                )
+        return lutq.reshape(len(rep), -1), biasq, a[rep], b[rep]
 
 
 # ------------------------------------------------------------ AQ fast-scan
@@ -706,7 +544,7 @@ def aq_quantize_lut(
     max_span_dis = (spans * w[None, :]).sum(axis=1)
     with np.errstate(divide="ignore"):
         a = np.minimum(255.0 / max_span_lut, 65535.0 / max_span_dis)
-    a = np.where(np.isfinite(a), a, 1.0)
+    a = np.where(np.isfinite(a), a, 1.0)  # degenerate all-constant LUTs
     b = mins.sum(axis=1)
     lutq = np.floor((luts - mins[:, :, None]) * a[:, None, None] + 0.5)
     np.clip(lutq, 0.0, 255.0, out=lutq)
@@ -733,8 +571,6 @@ def _norm_decode(codes: np.ndarray, M: int, norm_books: np.ndarray) -> np.ndarra
 def _fit_norm_books(norms: np.ndarray, ksub: int, seed: int) -> np.ndarray:
     """Train the (2, ksub) scalar-norm codebooks (2-level residual
     k-means on the 1-D norm values)."""
-    from faiss_spark.operators.codecs import _kmeans_np
-
     nb0, lab0 = _kmeans_np(norms[:, None], min(ksub, len(norms)), 10, seed)
     resid = norms - nb0[lab0, 0]
     nb1, _ = _kmeans_np(resid[:, None], min(ksub, len(resid)), 10, seed + 1)
@@ -823,8 +659,6 @@ def train_aq_fastscan(
     norm_scale from the training sample (reference
     IndexAdditiveQuantizerFastScan::estimate_norm_scale +
     quantize_lut.cpp:328 aq_estimate_norm_scale)."""
-    from faiss_spark.operators.codecs import ResidualQuantizer, _sampled_matrix
-
     rq = ResidualQuantizer(M=M, nbits=4, niter=niter, seed=seed).fit(
         vectors, vec_col=vec_col
     )
@@ -846,8 +680,6 @@ def aq_fastscan_encode(
     id_col: str = "id",
     vec_col: str = "vec",
 ) -> DataFrame:
-    from faiss_spark.operators.codecs import _map_codec
-
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         X = as_matrix(pdf[vec_col if vec_col in pdf else "vec"])
         return pd.DataFrame(
@@ -871,58 +703,15 @@ def aq_fastscan_search(
     """L2 top-k over AQ fast-scan codes: quantized-LUT accumulation with
     the norm rows re-scaled during the scan; reported distance is the
     de-quantized estimate plus the per-query ‖q‖² constant."""
-    spark = codes_df.sparkSession
     qids, Q = collect_queries_bounded(
         queries, qid_col, qvec_col, "aq_fastscan_search",
         d=model.rq.codebooks.shape[2],
     )
-    luts = model.float_luts(Q)
-    lutq, a, b = aq_quantize_lut(luts, M_norm=2, norm_scale=model.norm_scale)
-    qsq = (Q * Q).sum(1)
-    weights = np.ones(model.M + 2, np.int64)
-    weights[model.M :] = model.norm_scale
-    bc = spark.sparkContext.broadcast((qids, lutq, a, b, qsq, weights))
-    k_ = k
-
-    def scan(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_binary_matrix
-
-        qids_, lutq_, a_, b_, qsq_, w_ = bc.value
-        nq = len(qids_)
-        acc = TopKAccumulator(nq, k_, largest=False)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes = arrow_binary_matrix(batch.column(1))
-            D16 = _saturating_lut_sum(lutq_, codes, row_weights=w_)
-            est = D16 / a_[:, None] + b_[:, None] + qsq_[:, None]
-            acc.push(
-                est,
-                np.asarray(
-                    batch.column(0).to_numpy(zero_copy_only=False), np.int64
-                ),
-            )
-        qidx, nid, nd = acc.emit()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(qids_[qidx], pa.int64()),
-                pa.array(nid, pa.int64()),
-                pa.array(nd, pa.float64()),
-            ],
-            names=["qid", "id", "dist"],
-        )
-
-    cands = codes_df.select("id", "code").mapInArrow(
-        scan, schema="qid bigint, id bigint, dist double"
+    scorer = AQ4FastScanScorer(
+        ksub=model.ksub, rq=model.rq, norm_books=model.norm_books,
+        norm_scale=model.norm_scale, by_residual=False,
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _flat_lut_search(codes_df, qids, Q, k, scorer)
 
 
 # ------------------------------------------------------- IVF AQ fast-scan
@@ -1009,13 +798,6 @@ class IVFAQFastScanIndex:
         rq_niter: int = 10,
         by_residual: bool = True,
     ) -> "IVFAQFastScanIndex":
-        from faiss_spark.operators.cluster import KMeans
-        from faiss_spark.operators.codecs import (
-            ResidualQuantizerModel,
-            _kmeans_np,
-            _sampled_matrix,
-        )
-
         km = KMeans(k=nlist, niter=niter, seed=seed).fit(vectors, vec_col=vec_col)
         C = km.centroids
         if not by_residual:
@@ -1109,19 +891,15 @@ class IVFAQFastScanIndex:
     def save(self, path: str) -> "IVFAQFastScanIndex":
         """write_index: partitioned (rcodes ++ norm-code) table +
         centroid/RQ-codebook/norm-codebook artifacts."""
-        import os as _os
-
         if self.codes is None:
             raise ValueError("index has no codes table; call add() first")
         spark = self.codes.sparkSession
         self.codes.repartition("list_no").write.mode("overwrite").partitionBy(
             "list_no"
         ).parquet(path)
-        from faiss_spark.sources import fsio
-
-        fsio.write_npy(spark, _os.path.join(path, "_ivfaqfs_centroids.npy"), self.centroids)
-        fsio.write_npy(spark, _os.path.join(path, "_ivfaqfs_codebooks.npy"), self.rq.codebooks)
-        fsio.write_npy(spark, _os.path.join(path, "_ivfaqfs_norm_books.npy"), self.norm_books)
+        fsio.write_npy(spark, os.path.join(path, "_ivfaqfs_centroids.npy"), self.centroids)
+        fsio.write_npy(spark, os.path.join(path, "_ivfaqfs_codebooks.npy"), self.rq.codebooks)
+        fsio.write_npy(spark, os.path.join(path, "_ivfaqfs_norm_books.npy"), self.norm_books)
         meta = {
             "norm_scale": int(self.norm_scale),
             "by_residual": bool(self.by_residual),
@@ -1131,8 +909,6 @@ class IVFAQFastScanIndex:
             # stamp the split structure so load rebuilds the PER-SPLIT
             # encoder (the padded codebooks alone reproduce decode/LUTs
             # but not PRQ/PLSQ encoding)
-            from faiss_spark.operators.codecs import LocalSearchQuantizerModel
-
             sub0 = self.rq.paq.subs[0]
             # the meta stamps sub0's shape for ALL splits; a hand-built
             # adapter with heterogeneous splits would silently round-trip
@@ -1159,20 +935,15 @@ class IVFAQFastScanIndex:
                 "lsq": isinstance(sub0, LocalSearchQuantizerModel),
                 "icm_iters": int(getattr(sub0, "icm_iters", 3)),
             }
-        fsio.write_json(spark, _os.path.join(path, "_ivfaqfs_meta.json"), meta)
+        fsio.write_json(spark, os.path.join(path, "_ivfaqfs_meta.json"), meta)
         self.codes = spark.read.parquet(path)
         return self
 
     @staticmethod
     def load(spark, path: str) -> "IVFAQFastScanIndex":
-        import os as _os
-
-        from faiss_spark.operators.codecs import ResidualQuantizerModel
-        from faiss_spark.sources import fsio
-
-        meta = fsio.read_json(spark, _os.path.join(path, "_ivfaqfs_meta.json"))
+        meta = fsio.read_json(spark, os.path.join(path, "_ivfaqfs_meta.json"))
         books = fsio.read_npy(
-            spark, _os.path.join(path, "_ivfaqfs_codebooks.npy")
+            spark, os.path.join(path, "_ivfaqfs_codebooks.npy")
         )
         if "paq" in meta:
             pm = meta["paq"]
@@ -1182,9 +953,9 @@ class IVFAQFastScanIndex:
         else:
             rq = ResidualQuantizerModel(codebooks=books, beam=meta["beam"])
         return IVFAQFastScanIndex(
-            centroids=fsio.read_npy(spark, _os.path.join(path, "_ivfaqfs_centroids.npy")),
+            centroids=fsio.read_npy(spark, os.path.join(path, "_ivfaqfs_centroids.npy")),
             rq=rq,
-            norm_books=fsio.read_npy(spark, _os.path.join(path, "_ivfaqfs_norm_books.npy")),
+            norm_books=fsio.read_npy(spark, os.path.join(path, "_ivfaqfs_norm_books.npy")),
             norm_scale=meta["norm_scale"],
             codes=spark.read.parquet(path),
             by_residual=meta["by_residual"],
@@ -1198,109 +969,75 @@ class IVFAQFastScanIndex:
         qid_col: str = "qid",
         qvec_col: str = "vec",
     ) -> DataFrame:
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        C = self.centroids
-        M, ksub = self.M, self.ksub
-        nlist = len(C)
-        nprobe = min(nprobe, nlist)
-
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFAQFastScanIndex.search",
-            d=C.shape[1],
+        """IVF AQ fast-scan k-NN in the shared driver plan (ivf.py):
+        probes and quantized LUTs on the driver, then AQ4FastScanScorer
+        over the probed lists. A query side past the driver bound
+        auto-falls-back to ``aq_fastscan_search_preassigned``."""
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: aq_fastscan_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
         )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        nq = len(Q)
-        CD = pairwise_distances(Q, C, "l2")
-        probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe]
-        # one 2-D LUT per query (shared across probes) — rows are exactly
-        # AQFastScanModel.float_luts of the RQ (residual or raw)
+
+    def _coarse(self) -> FlatCoarse:
+        return FlatCoarse(self.centroids, "l2")
+
+    def _scorer(self, lists=None) -> "AQ4FastScanScorer":
+        return AQ4FastScanScorer(
+            ksub=self.ksub, centroids=self.centroids, rq=self.rq,
+            norm_books=self.norm_books, norm_scale=self.norm_scale,
+            by_residual=self.by_residual,
+        )
+
+
+@dataclass
+class AQ4FastScanScorer(FastScanScorer):
+    """IVFAQFastScanIndex rows: ONE 2-D LUT per query shared by its
+    probes (AQFastScanModel.float_luts). by_residual: the probe's
+    −2⟨q, c_j⟩ is the quantized bias (aq_quantize_lut_bias).
+    by_residual=False: no bias, the flat aq_fastscan_search
+    quantization verbatim. The norm rows count norm_scale times and
+    every row carries the ‖q‖² addend."""
+
+    centroids: np.ndarray = None
+    rq: "object" = None
+    norm_books: np.ndarray = None
+    norm_scale: int = 1
+    by_residual: bool = True
+    payload = FastScanScorer.payload + (("qsq", "double"),)
+
+    @property
+    def weights(self) -> np.ndarray:
+        w = np.ones(self.rq.M + 2, np.int64)
+        w[self.rq.M :] = self.norm_scale
+        return w
+
+    def query_payload(self, Q, rep, cells):
         luts = AQFastScanModel(
             rq=self.rq, norm_books=self.norm_books, norm_scale=self.norm_scale
         ).float_luts(Q)  # (nq, M+2, ksub)
         if self.by_residual:
-            qc = Q @ C.T  # ⟨q, c⟩ for the per-probe bias
-            lutq = np.empty((nq, M + 2, ksub), np.uint8)
-            biasq = np.empty((nq, nprobe), np.uint16)
-            a = np.empty(nq)
-            b = np.empty(nq)
-            for qi in range(nq):
-                bias = -2.0 * qc[qi, probes[qi]]
-                lutq[qi], biasq[qi], a[qi], b[qi] = aq_quantize_lut_bias(
-                    luts[qi], bias, M_norm=2, norm_scale=self.norm_scale
+            qc = Q @ self.centroids.T  # ⟨q, c⟩ for the per-probe bias
+            lutq = np.empty(luts.shape, np.uint8)
+            biasq = np.empty(len(rep), np.uint16)
+            a, b = np.empty(len(Q)), np.empty(len(Q))
+            starts = _query_starts(rep, len(Q))
+            for qi in range(len(Q)):
+                s, e = starts[qi], starts[qi + 1]
+                lutq[qi], biasq[s:e], a[qi], b[qi] = aq_quantize_lut_bias(
+                    luts[qi], -2.0 * qc[qi, cells[s:e]],
+                    M_norm=2, norm_scale=self.norm_scale,
                 )
         else:
-            # no bias: the flat aq_fastscan quantization verbatim, so at
-            # full probe results are bit-identical to aq_fastscan_search
             lutq, a, b = aq_quantize_lut(
                 luts, M_norm=2, norm_scale=self.norm_scale
             )
-            biasq = np.zeros((nq, nprobe), np.uint16)
-        qsq = (Q * Q).sum(1)
-        weights = np.ones(M + 2, np.int64)
-        weights[M:] = self.norm_scale
-
-        probed_lists = sorted({int(c) for c in probes.ravel()})
-        l2q: dict[int, list[tuple[int, int]]] = {c: [] for c in probed_lists}
-        for qi in range(nq):
-            for j, c in enumerate(probes[qi]):
-                l2q[int(c)].append((qi, j))
-        l2q_np = {
-            c: (
-                np.asarray([p[0] for p in v], np.int64),
-                np.asarray([p[1] for p in v], np.int64),
-            )
-            for c, v in l2q.items()
-        }
-        bc = spark.sparkContext.broadcast(
-            (qids, lutq, biasq, a, b, qsq, weights, l2q_np)
-        )
-        k_ = k
-        pruned = self.codes.filter(F.col("list_no").isin(probed_lists))
-
-        def scan(batches):
-            from faiss_spark.kernels import arrow_code_groups
-
-            qids_, lutq_, biasq_, a_, b_, qsq_, w_, l2q_ = bc.value
-            accs: dict[int, TopKAccumulator] = {}
-            qsels: dict[int, np.ndarray] = {}
-            for list_no, codes, ids in arrow_code_groups(batches):
-                sel = l2q_.get(list_no)
-                if sel is None or len(sel[0]) == 0:
-                    continue
-                qsel, jsel = sel
-                D16 = _saturating_lut_sum(
-                    lutq_[qsel],
-                    codes,
-                    init=biasq_[qsel, jsel],
-                    row_weights=w_,
-                )
-                est = (
-                    D16 / a_[qsel][:, None]
-                    + b_[qsel][:, None]
-                    + qsq_[qsel][:, None]
-                )
-                if list_no not in accs:
-                    accs[list_no] = TopKAccumulator(len(qsel), k_, largest=False)
-                    qsels[list_no] = qsel
-                accs[list_no].push(est, ids)
-            yield from _emit_group_candidates(qids_, accs, qsels)
-
-        cands = pruned.select("list_no", "id", "code").mapInArrow(
-            scan, schema="qid bigint, id bigint, dist double"
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
+            biasq = np.zeros(len(rep), np.uint16)
         return (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_)
-            .select("qid", "id", "dist", "rank")
+            lutq.reshape(len(Q), -1)[rep], biasq, a[rep], b[rep],
+            (Q * Q).sum(1)[rep],
         )
 
 
@@ -1315,127 +1052,15 @@ def aq_fastscan_search_preassigned(
 ) -> DataFrame:
     """Distributed big-batch twin of IVFAQFastScanIndex.search
     (reference IndexIVFAdditiveQuantizerFastScan.cpp:352-401): the
-    query map builds ONE 2-D LUT per query (AQFastScanModel.float_luts,
-    shared across probes) and quantizes it with the per-probe
-    −2⟨q,c_j⟩ bias exactly as the driver path, then each (qid, list_no)
-    probe row ships (lut bytes, bias, a, b, ‖q‖²) through the cogroup —
-    the per-cell scan is the same NormTableScaler saturating sum with
-    no quantizer state. Covers both by_residual modes, PRQ/PLSQ
-    included (the ProductAQAdapter rides inside rq)."""
-    from faiss_spark.operators.ivf import (
-        _cand_table,
-        _empty_cand_table,
-        _window_topk,
-        cogrouped_cell_scan,
+    probe-assignment map builds each query's 2-D LUT once and quantizes
+    it with the per-probe −2⟨q,c_j⟩ bias (AQ4FastScanScorer), so every
+    probe row ships (lut bytes, bias, a, b, ‖q‖²) through the cogroup
+    and each cell runs the driver plan's scorer. Covers both
+    by_residual modes, PRQ/PLSQ included (the ProductAQAdapter rides
+    inside rq)."""
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows
     )
-
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    M, ksub = index.M, index.ksub
-    norm_scale = index.norm_scale
-    by_res = index.by_residual
-    nprobe_ = min(nprobe, len(index.centroids))
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (index.centroids, index.rq, index.norm_books)
-    )
-    k_ = k
-
-    def assign_probes(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_id_vec_blocks
-
-        C, rq, norm_books = bc.value
-        model = AQFastScanModel(
-            rq=rq, norm_books=norm_books, norm_scale=norm_scale
-        )
-        for qids, Q, _ in arrow_id_vec_blocks(batches):
-            nq = len(Q)
-            CD = pairwise_distances(Q, C, "l2")
-            probes = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-            luts = model.float_luts(Q)  # (nq, M+2, ksub)
-            if by_res:
-                qc = Q @ C.T
-                lutq = np.empty((nq, M + 2, ksub), np.uint8)
-                biasq = np.empty((nq, nprobe_), np.uint16)
-                a = np.empty(nq)
-                b = np.empty(nq)
-                for qi in range(nq):
-                    bias = -2.0 * qc[qi, probes[qi]]
-                    lutq[qi], biasq[qi], a[qi], b[qi] = aq_quantize_lut_bias(
-                        luts[qi], bias, M_norm=2, norm_scale=norm_scale
-                    )
-            else:
-                lutq, a, b = aq_quantize_lut(
-                    luts, M_norm=2, norm_scale=norm_scale
-                )
-                biasq = np.zeros((nq, nprobe_), np.uint16)
-            qsq = (Q * Q).sum(1)
-            rep = np.repeat(np.arange(nq), nprobe_)
-            lut_rows = lutq.reshape(nq, -1)[rep]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    pa.array(probes.astype(np.int32).ravel(), pa.int32()),
-                    pa.array(list(map(bytes, lut_rows)), pa.binary()),
-                    pa.array(biasq.ravel().astype(np.int32), pa.int32()),
-                    pa.array(a[rep], pa.float64()),
-                    pa.array(b[rep], pa.float64()),
-                    pa.array(qsq[rep], pa.float64()),
-                ],
-                names=["qid", "list_no", "lut", "bias", "a", "b", "qsq"],
-            )
-
-    q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
-    )
-    probes_df = q.mapInArrow(
-        assign_probes,
-        schema=(
-            "qid bigint, list_no int, lut binary, bias int, "
-            "a double, b double, qsq double"
-        ),
-    )
-
-    def scan_cell(key, ptab, ctab):
-        from faiss_spark.kernels import arrow_binary_matrix, arrow_i64
-
-        if ptab.num_rows == 0 or ctab.num_rows == 0:
-            return _empty_cand_table()
-        qids_ = arrow_i64(ptab.column("qid"))
-        lutq = arrow_binary_matrix(ptab.column("lut")).reshape(-1, M + 2, ksub)
-        bias = arrow_i64(ptab.column("bias")).astype(np.uint16)
-
-        def f64(name):
-            return np.asarray(
-                ptab.column(name).combine_chunks().to_numpy(
-                    zero_copy_only=False
-                ),
-                np.float64,
-            )
-
-        a_, b_, qsq_ = f64("a"), f64("b"), f64("qsq")
-        codes = arrow_binary_matrix(ctab.column("code"))
-        ids = arrow_i64(ctab.column("id"))
-        weights = np.ones(M + 2, np.int64)
-        weights[M:] = norm_scale
-        acc = TopKAccumulator(len(qids_), k_, largest=False)
-        chunk = max(16, (1 << 22) // max(1, len(qids_)))
-        for s in range(0, len(ids), chunk):
-            D16 = _saturating_lut_sum(
-                lutq, codes[s:s + chunk], init=bias, row_weights=weights
-            )
-            est = D16 / a_[:, None] + b_[:, None] + qsq_[:, None]
-            acc.push(est, ids[s:s + chunk])
-        qidx, nid, nd = acc.emit()
-        return _cand_table(qids_[qidx], nid, nd)
-
-    codes = index.codes.select("list_no", "id", "code")
-    cands = cogrouped_cell_scan(
-        index, probes_df, codes, max_cell_rows, scan_cell
-    )
-    return _window_topk(cands, k, largest=False)
 
 
 # --------------------------------------- product-AQ fast-scan (PRQ/PLSQ)
@@ -1497,12 +1122,6 @@ def _paq_adapter_from_books(
     """Rebuild a ProductAQAdapter from the persisted PADDED codebooks by
     slicing each split's block back out — save/load round-trips the
     per-split encode semantics, not just the decode/LUT math."""
-    from faiss_spark.operators.codecs import (
-        LocalSearchQuantizerModel,
-        ProductAdditiveQuantizerModel,
-        ResidualQuantizerModel,
-    )
-
     d = books.shape[2]
     dsub = d // nsplits
     subs = []
@@ -1533,11 +1152,6 @@ def train_paq_fastscan(
     flat IndexProduct{Residual,LocalSearch}QuantizerFastScan of the
     reference (index_factory.cpp:625-640), searched through the SAME
     ST_norm_rq2x4 LUT machinery as RQ fast-scan."""
-    from faiss_spark.operators.codecs import (
-        ProductAdditiveQuantizer,
-        _sampled_matrix,
-    )
-
     paq = ProductAdditiveQuantizer(
         nsplits=nsplits, M_per_split=Msub, nbits=4, niter=niter, seed=seed,
         lsq=lsq,
@@ -1575,12 +1189,6 @@ def train_ivf_paq_fastscan(
     codes); x4fsr encodes residuals, built by feeding the residual frame
     (map-only, broadcast centroids) to the SAME distributed PAQ trainer
     the flat codec uses."""
-    from faiss_spark.operators.cluster import KMeans
-    from faiss_spark.operators.codecs import (
-        ProductAdditiveQuantizer,
-        _sampled_matrix,
-    )
-
     km = KMeans(k=nlist, niter=niter, seed=seed).fit(vectors, vec_col=vec_col)
     C = km.centroids
     if not by_residual:

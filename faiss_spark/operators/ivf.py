@@ -22,13 +22,25 @@ One scan loop, one scorer per codec — faiss's ``search_preassigned`` loop
 plus an ``InvertedListScanner`` per codec. Each codec has exactly one
 ``CellScorer``: FlatScorer (raw floats: IVFIndex, RCQ, nested, IMI,
 MIQ2), SQScorer, PQScorer (IVFPQ and IMIPQ, with polysemous_ht), AQScorer
-(k-means or RCQ coarse, '_N*' norm estimator) and PQRScorer. A scorer is
-broadcast codec state; a task drives it as::
+(k-means or RCQ coarse, '_N*' norm estimator), PQRScorer, SHScorer
+(IVFSpectralHash) and, in fastscan.py, the 4-bit fast-scan scorers
+(IVFPQFastScanIndex and IVFAQFastScanIndex). A scorer is broadcast
+codec state; a task drives it as::
 
-    s = scorer.start(Q, k)              # the task's query matrix
-    cell = s.bind(list_no, qsel)        # one list × the queries Q[qsel]
+    s = scorer.start(Q, k)              # the task's query rows
+    cell = s.bind(list_no, qsel)        # one list × the rows Q[qsel]
     cell.push(cols, ids)                # a codes block of any size
     qidx, ids, dist = cell.emit()       # that cell's top-k
+
+Query rows are the float query vectors (``vec``) unless the scorer
+declares a ``payload``: per-(query, probe) columns that
+``query_payload(Q, rep, cells)`` derives once per search, where the
+probes are assigned (fast-scan quantizes each query's LUTs jointly over
+its probes, so ``bind`` must not redo it once per probed cell). The
+driver plan computes them on the driver and broadcasts them; the cogroup
+plan computes them in the probe-assignment map and carries them as
+probe-table columns in place of ``vec``. Either way ``bind`` receives
+the payload rows of the cell's probes.
 
 Two plan shapes drive the scorers; ``collect_queries_bounded`` picks one
 by query-side size:
@@ -501,23 +513,31 @@ def _list_sizes(index) -> np.ndarray:
     return sizes
 
 
-def _invert_probes(probes) -> dict[int, np.ndarray]:
-    """list_no -> the query rows probing it, ascending (the ivf_tools
-    big-batch regrouping, contrib/ivf_tools.py:26). ``probes`` is an
-    (nq, p) array or ragged per-query arrays."""
+def _flat_probes(probes) -> tuple[np.ndarray, np.ndarray]:
+    """``(rep, cells)``: probe r is query row rep[r] probing list
+    cells[r], row-major (each query's probes contiguous, nearest first).
+    ``probes`` is an (nq, p) array or ragged per-query arrays."""
     if isinstance(probes, np.ndarray):
-        lens = np.full(len(probes), probes.shape[1])
-        flat = probes.ravel()
-    else:
-        lens = np.fromiter((len(p) for p in probes), np.int64, len(probes))
-        flat = np.concatenate(probes) if len(probes) else np.empty(0, np.int64)
-    rows = np.repeat(np.arange(len(lens)), lens)
-    order = np.argsort(flat, kind="stable")
-    cells, starts = np.unique(flat[order], return_index=True)
+        return np.repeat(np.arange(len(probes)), probes.shape[1]), probes.ravel()
+    lens = np.fromiter((len(p) for p in probes), np.int64, len(probes))
+    flat = np.concatenate(probes) if len(probes) else np.empty(0, np.int64)
+    return np.repeat(np.arange(len(lens)), lens), flat
+
+
+def _group_rows(rows: np.ndarray, cells: np.ndarray) -> dict[int, np.ndarray]:
+    """list_no -> the ``rows`` probing it, in probe order (the ivf_tools
+    big-batch regrouping, contrib/ivf_tools.py:26)."""
+    order = np.argsort(cells, kind="stable")
+    uniq, starts = np.unique(cells[order], return_index=True)
     ends = np.r_[starts[1:], len(order)]
     return {
-        int(c): rows[order[s:e]] for c, s, e in zip(cells, starts, ends)
+        int(c): rows[order[s:e]] for c, s, e in zip(uniq, starts, ends)
     }
+
+
+def _invert_probes(probes) -> dict[int, np.ndarray]:
+    """list_no -> the query rows probing it, ascending."""
+    return _group_rows(*_flat_probes(probes))
 
 
 # ------------------------------------------------------ stage B scorers
@@ -564,10 +584,18 @@ class CellScorer:
     cols = ("vec",)
     metric = "l2"
     prunes = False  # scores +inf for candidates it drops
+    #: per-(query, probe) query rows as (column, Spark type) pairs, built
+    #: by ``query_payload``; empty = the float query vectors
+    payload: tuple = ()
 
     @property
     def largest(self) -> bool:
         return self.metric in SIMILARITY_METRICS
+
+    def query_payload(self, Q: np.ndarray, rep: np.ndarray, cells: np.ndarray):
+        """The ``payload`` columns (numpy, one row per probe) for query
+        row rep[r] probing list cells[r] (`_flat_probes` order)."""
+        raise NotImplementedError
 
     def start(self, Q: np.ndarray, k: int) -> "CellScorer":
         s = copy.copy(self)  # per-task state never lands on the broadcast
@@ -812,6 +840,53 @@ class PQRScorer(CellScorer):
         return push
 
 
+@dataclass
+class SHScorer(CellScorer):
+    """Spectral-hash lists (reference IndexIVFSpectralHash scanner,
+    IndexIVFSpectralHash.cpp:244-300): ``bind`` binarizes the queries
+    against the list's thresholds (set_list re-binarizes per list), then
+    an exact Hamming scan over 0/1 bits through push_block — squared L2
+    on 0/1 vectors IS Hamming, integer-exact in f64."""
+
+    A: np.ndarray = None  # (nbit, d) vt matrix
+    b: np.ndarray | None = None  # (nbit,) vt bias
+    trained: np.ndarray | None = None  # (nlist, nbit) thresholds
+    period: float = 1.0
+    cols = ("code",)
+
+    def binarize(self, Xt: np.ndarray, lists) -> np.ndarray:
+        """binarize_with_freq over transformed rows with the thresholds
+        of ``lists`` (cpp:146-158): bit_j = floor((x_j − c_j)·2/period) & 1."""
+        c = 0.0 if self.trained is None else self.trained[lists]
+        freq = 2.0 / self.period
+        return (np.floor((Xt - c) * freq).astype(np.int64)) & 1
+
+    def encode(self, X: np.ndarray, lists) -> np.ndarray:
+        """0/1 bits of raw rows ``X`` (vt transform, then binarize)."""
+        return self.binarize(
+            X @ self.A.T + (self.b if self.b is not None else 0.0), lists
+        )
+
+    def set_list(self, acc, list_no, qsel):
+        from faiss_spark.operators.binary import _words_to_bits
+
+        nbit = len(self.A)
+        acc.bind_queries(
+            self.encode(self.Q[qsel], list_no).astype(np.float64), "l2"
+        )
+        chunk = max(1, _SCRATCH // nbit)
+
+        def push(cols, ids):
+            # packed words expand 64x: bounded chunks
+            for s in range(0, len(ids), chunk):
+                acc.push_block(
+                    _words_to_bits(cols[0][s : s + chunk], nbit),
+                    ids[s : s + chunk],
+                )
+
+        return push
+
+
 # ------------------------------------------------- the driver plan shape
 def _probed_groups(batches, l2q: dict, stats):
     """(list_no, qsel, payload, ids) for each probed-list block a
@@ -844,10 +919,11 @@ def _scan_probed_lists(
     stats: "IVFSearchStats | None" = None,
 ) -> DataFrame:
     """Stages B+C of the driver plan, shared by every coarse quantizer
-    and codec: ``l2q`` (list_no → query rows, `_invert_probes`) and the
-    queries broadcast; the ``list_no IN (probed)`` filter is partition
-    pruning; one mapInArrow binds each probed list to its queries
-    through ``scorer``; a window merges the per-list top-k."""
+    and codec: ``l2q`` (list_no → rows of ``Q``, `_invert_probes`), the
+    query rows ``Q`` (vectors, or the scorer's payload columns) and
+    their ``qids`` broadcast; the ``list_no IN (probed)`` filter is
+    partition pruning; one mapInArrow binds each probed list to its
+    rows through ``scorer``; a window merges the per-list top-k."""
     bc = codes.sparkSession.sparkContext.broadcast((qids, Q, l2q, scorer))
     accs = _stats_accs(stats)
 
@@ -888,8 +964,10 @@ def _driver_search(
     """The driver-planned k-NN every IVF family shares: one bounded query
     collect, the index's probe function on the driver, then
     `_scan_probed_lists` with the index's scorer (``opts`` are codec
-    knobs, e.g. polysemous_ht). Past the collect bound ``fallback`` (the
-    family's cogroup entry point) runs instead; without one it raises."""
+    knobs, e.g. polysemous_ht) over the queries, or over one payload row
+    per probe when the scorer declares a payload. Past the collect bound
+    ``fallback`` (the family's cogroup entry point) runs instead;
+    without one it raises."""
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
     prober = _prober(index, nprobe, max_codes)
@@ -902,10 +980,13 @@ def _driver_search(
     qids, Q = collected
     if stats is not None:
         stats.nq = len(qids)
-    l2q = _invert_probes(prober(Q))
-    return _scan_probed_lists(
-        index.codes, qids, Q, l2q, k, index._scorer(sorted(l2q), **opts), stats
-    )
+    rep, cells = _flat_probes(prober(Q))
+    l2q = _group_rows(rep, cells)
+    scorer = index._scorer(sorted(l2q), **opts)
+    if scorer.payload:
+        l2q = _group_rows(np.arange(len(cells)), cells)
+        qids, Q = qids[rep], scorer.query_payload(Q, rep, cells)
+    return _scan_probed_lists(index.codes, qids, Q, l2q, k, scorer, stats)
 
 
 def ivf_range_search(
@@ -2071,7 +2152,7 @@ def _cogroup_search(
 ) -> DataFrame:
     """The cogroup k-NN every IVF family shares: `_preassigned_cogrouped`
     with the index's scorer (``opts`` are codec knobs) bound once per
-    cell, then the global window top-k."""
+    cell to the cell's probe rows, then the global window top-k."""
     scorer = index._scorer(**opts)
     bc = queries.sparkSession.sparkContext.broadcast(scorer)
 
@@ -2079,8 +2160,14 @@ def _cogroup_search(
         if ptab.num_rows == 0 or ctab.num_rows == 0:
             return _empty_cand_table()
         scorer_ = bc.value
-        qids, Qg = _cand_queries(ptab)
-        cell = scorer_.start(Qg, k).bind(key[0].as_py(), np.arange(len(Qg)))
+        if scorer_.payload:
+            qids = arrow_i64(ptab.column("qid"))
+            Qg = tuple(
+                arrow_payload_matrix(ptab.column(c)) for c, _ in scorer_.payload
+            )
+        else:
+            qids, Qg = _cand_queries(ptab)
+        cell = scorer_.start(Qg, k).bind(key[0].as_py(), np.arange(len(qids)))
         cell.push(
             tuple(arrow_payload_matrix(ctab.column(c)) for c in scorer_.cols),
             arrow_i64(ctab.column("id")),
@@ -2090,7 +2177,7 @@ def _cogroup_search(
 
     cands = _preassigned_cogrouped(
         index, queries, nprobe, qid_col, qvec_col, max_cell_rows, scan_cell,
-        scorer.cols, max_codes, assign_payload, assign_fn,
+        scorer, max_codes, assign_payload, assign_fn,
     )
     return _window_topk(cands, k, scorer.largest)
 
@@ -2217,6 +2304,7 @@ def _probe_table(
     qvec_col: str,
     assign_payload,
     assign_fn,
+    scorer: CellScorer | None = None,
 ) -> DataFrame:
     """Distributed probe assignment shared by every preassigned search:
     broadcast the (small) quantizer state, map each query batch through
@@ -2224,53 +2312,63 @@ def _probe_table(
     (ragged under a max_codes budget), and emit one (qid, vec, list_no)
     row per probe via Arrow take — no per-row Python objects (at 100 TB
     the query side is itself huge; this map is the whole plan's
-    fan-out)."""
-    bc = queries.sparkSession.sparkContext.broadcast(assign_payload)
-
-    def assign_probes(batches):
-        import pyarrow as pa
-
-        from faiss_spark.kernels import arrow_id_vec_blocks
-
-        payload = bc.value
-        f32_list = pa.list_(pa.float32())
-        for qids, Q, vec_arr in arrow_id_vec_blocks(batches):
-            order = assign_fn(payload, Q)
-            if isinstance(order, np.ndarray):
-                rep = np.repeat(
-                    np.arange(len(qids)), order.shape[1]
-                )
-                cells = order.astype(np.int32).ravel()
-            else:  # ragged probe sets (per-query scan budgets)
-                lens = np.fromiter(
-                    (len(o) for o in order), np.int64, len(order)
-                )
-                rep = np.repeat(np.arange(len(qids)), lens)
-                cells = (
-                    np.concatenate(order).astype(np.int32)
-                    if len(rep)
-                    else np.empty(0, np.int32)
-                )
-            # the declared output schema is array<float>; an array<double>
-            # input (DataFrames built from Python floats) must cast before
-            # the zero-copy pass-through, as imi_assign/KMeansModel.assign do
-            if vec_arr.type != f32_list:
-                vec_arr = vec_arr.cast(f32_list)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qids[rep], pa.int64()),
-                    vec_arr.take(pa.array(rep, pa.int64())),
-                    pa.array(cells, pa.int32()),
-                ],
-                names=["qid", "vec", "list_no"],
-            )
+    fan-out). ``vec`` keeps the query column's float width. A scorer
+    with a ``payload`` gets its per-probe columns in place of ``vec``,
+    computed here once per query."""
+    import pyarrow as pa
 
     q = queries.select(
         F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
     )
-    return q.mapInArrow(
-        assign_probes, schema="qid bigint, vec array<float>, list_no int"
+    payload = scorer.payload if scorer is not None else ()
+    wide = q.schema["vec"].dataType.simpleString() == "array<double>"
+    want = pa.list_(pa.float64() if wide else pa.float32())
+    mid = payload or [("vec", f"array<{want.value_type}>")]
+    bc = queries.sparkSession.sparkContext.broadcast((assign_payload, scorer))
+
+    def assign_probes(batches):
+        from faiss_spark.kernels import arrow_id_vec_blocks
+
+        assign_payload_, scorer_ = bc.value
+        for qids, Q, vec_arr in arrow_id_vec_blocks(batches):
+            rep, cells = _flat_probes(assign_fn(assign_payload_, Q))
+            if payload:
+                rows = scorer_.query_payload(Q, rep, cells)
+                cols = [_arrow_column(x, t) for x, (_, t) in zip(rows, payload)]
+            else:
+                # other numeric element types cast before the zero-copy
+                # pass-through, as imi_assign/KMeansModel.assign do
+                if vec_arr.type != want:
+                    vec_arr = vec_arr.cast(want)
+                cols = [vec_arr.take(pa.array(rep, pa.int64()))]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids[rep], pa.int64()),
+                    *cols,
+                    pa.array(cells.astype(np.int32), pa.int32()),
+                ],
+                names=["qid", *(c for c, _ in mid), "list_no"],
+            )
+
+    schema = ", ".join(
+        ["qid bigint", *(f"{c} {t}" for c, t in mid), "list_no int"]
     )
+    return q.mapInArrow(assign_probes, schema=schema)
+
+
+def _arrow_column(x: np.ndarray, spark_type: str):
+    """A numpy payload column as the Arrow array of ``spark_type``:
+    fixed-width uint8 rows become ``binary`` without per-row objects."""
+    import pyarrow as pa
+
+    if spark_type == "binary":
+        x = np.ascontiguousarray(x, np.uint8)
+        offsets = np.arange(len(x) + 1, dtype=np.int32) * x.shape[1]
+        return pa.Array.from_buffers(
+            pa.binary(), len(x), [None, pa.py_buffer(offsets), pa.py_buffer(x)]
+        )
+    dtype = {"int": np.int32, "double": np.float64}[spark_type]
+    return pa.array(np.asarray(x, dtype))
 
 
 def _preassigned_cogrouped(
@@ -2281,7 +2379,7 @@ def _preassigned_cogrouped(
     qvec_col: str,
     max_cell_rows: int | None,
     scan_cell,
-    code_cols: tuple = ("vec",),
+    scorer: CellScorer | None = None,
     max_codes: int | None = None,
     assign_payload=None,
     assign_fn=None,
@@ -2289,13 +2387,17 @@ def _preassigned_cogrouped(
     """The cogroup plan shape (k-NN and range): distributed probe
     assignment through the index's probe function (or the caller's
     ``assign_fn``), then `cogrouped_cell_scan` over the ``list_no, id,
-    *code_cols`` codes table. Emits ``qid, id, dist`` candidate rows."""
+    *scorer.cols`` codes table (``vec`` without a scorer). Emits ``qid,
+    id, dist`` candidate rows."""
     if index.codes is None:
         raise ValueError("index has no codes table; call add() first")
     if assign_fn is None:
         assign_payload = _prober(index, nprobe, max_codes)
         assign_fn = _Prober.__call__
-    probes = _probe_table(queries, qid_col, qvec_col, assign_payload, assign_fn)
+    probes = _probe_table(
+        queries, qid_col, qvec_col, assign_payload, assign_fn, scorer
+    )
+    code_cols = scorer.cols if scorer is not None else ("vec",)
     codes = index.codes.select("list_no", "id", *code_cols)
     return cogrouped_cell_scan(index, probes, codes, max_cell_rows, scan_cell)
 
@@ -2310,9 +2412,9 @@ def cogrouped_cell_scan(
     """Generic cell-cogroup tail of the preassigned searches: left-semi
     cell prune + hot/cold cogroup on ``list_no``, parameterized by the
     per-cell scan. ``probes`` carries ``list_no`` plus whatever
-    query payload the scan reads (float ``vec``, binary ``qcode``);
-    ``codes`` likewise. Shared by the IVF k-NN and range cogroups, the
-    fast-scan twins and the binary Hamming twin
+    query payload the scan reads (float ``vec``, a scorer's payload
+    columns, binary ``qcode``); ``codes`` likewise. Shared by the IVF
+    k-NN and range cogroups and the binary Hamming twins
     (binary.binary_search_preassigned).
 
     The scan is Arrow-native (``applyInArrow``):
@@ -3509,8 +3611,8 @@ class IVFSpectralHash:
          bit_j = int64(floor((x_j − c_j) · 2/period)) & 1.
 
     The query code is list-DEPENDENT (scanner.set_list re-binarizes the
-    query against each probed list's thresholds, cpp:244-258), so the
-    probe table carries one qcode per (query, probed list)."""
+    query against each probed list's thresholds, cpp:244-258), so
+    SHScorer binarizes the queries once per bound list."""
 
     def __init__(
         self,
@@ -3615,43 +3717,53 @@ class IVFSpectralHash:
     def _binarize(self, Xt: np.ndarray, lists: np.ndarray) -> np.ndarray:
         """binarize_with_freq over transformed rows with each row's list
         thresholds (cpp:146-158)."""
-        c = 0.0 if self.trained is None else self.trained[lists]
-        freq = 2.0 / self.period
-        return (np.floor((Xt - c) * freq).astype(np.int64)) & 1
+        return self._scorer().binarize(Xt, lists)
+
+    def _coarse(self) -> "FlatCoarse":
+        return FlatCoarse(self.centroids, "l2")
+
+    def _scorer(self, lists=None) -> "CellScorer":
+        return SHScorer(
+            A=self.A, b=self.b, trained=self.trained, period=self.period
+        )
 
     def add(self, vectors: DataFrame, id_col: str = "id", vec_col: str = "vec"):
         from faiss_spark.operators.binary import _bits_to_words
 
-        spark = vectors.sparkSession
-        bc = spark.sparkContext.broadcast(self)
+        bc = vectors.sparkSession.sparkContext.broadcast(
+            (self.centroids, self._scorer())
+        )
 
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idx = bc.value
-            C = idx.centroids
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = as_matrix(pdf["vec"])
+        def enc(batches):
+            import pyarrow as pa
+
+            from faiss_spark.kernels import arrow_id_vec_blocks
+
+            C, sh = bc.value
+            for ids, X, _ in arrow_id_vec_blocks(batches):
                 d2 = (
                     (X * X).sum(1)[:, None]
                     + (C * C).sum(1)[None, :]
                     - 2.0 * (X @ C.T)
                 )
                 lists = d2.argmin(1)
-                Xt = X @ idx.A.T + (idx.b if idx.b is not None else 0.0)
-                words = _bits_to_words(idx._binarize(Xt, lists))
-                yield pd.DataFrame(
-                    {
-                        "list_no": lists.astype(np.int32),
-                        "id": pdf["id"].to_numpy(np.int64),
-                        "code": list(words),
-                    }
+                words = _bits_to_words(sh.encode(X, lists))
+                offsets = np.arange(len(ids) + 1, dtype=np.int32) * words.shape[1]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(lists.astype(np.int32), pa.int32()),
+                        pa.array(ids, pa.int64()),
+                        pa.ListArray.from_arrays(
+                            pa.array(offsets), pa.array(words.ravel())
+                        ),
+                    ],
+                    names=["list_no", "id", "code"],
                 )
 
         src = vectors.select(
             F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
         )
-        self.codes = src.mapInPandas(
+        self.codes = src.mapInArrow(
             enc, schema="list_no int, id bigint, code array<bigint>"
         )
         return self
@@ -3695,61 +3807,16 @@ class IVFSpectralHash:
         self, queries: DataFrame, k: int, nprobe: int = 1,
         qid_col: str = "qid", qvec_col: str = "vec",
     ) -> DataFrame:
-        """Coarse L2 probes + Hamming scan over binarized codes (JVM bit
-        ops after the partition-pruned join). A query side past the
-        driver bound auto-falls-back to ``sh_search_preassigned``,
-        which builds the per-(query, probed-list) qcodes executor-side
-        and joins without collecting."""
-        from faiss_spark.operators.binary import _bits_to_words, hamming_expr
-
-        if self.codes is None:
-            raise ValueError("index has no codes table; call add() first")
-        spark = self.codes.sparkSession
-        collected = collect_queries_bounded(
-            queries, qid_col, qvec_col, "IVFSpectralHash.search",
-            d=self.centroids.shape[1],
+        """Coarse L2 probes, then the Hamming scan of each probed list
+        against the query re-binarized with that list's thresholds
+        (SHScorer). A query side past the driver bound auto-falls-back
+        to ``sh_search_preassigned``."""
+        return _driver_search(
+            self, queries, k, nprobe, qid_col, qvec_col,
             fallback=lambda: sh_search_preassigned(
                 self, queries, k, nprobe=nprobe,
                 qid_col=qid_col, qvec_col=qvec_col,
             ),
-        )
-        if isinstance(collected, DataFrame):
-            return collected
-        qids, Q = collected
-        CD = pairwise_distances(Q, self.centroids, "l2")
-        nprobe_ = min(nprobe, len(self.centroids))
-        order = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-        probed = sorted({int(c) for c in order.ravel()})
-        Qt = Q @ self.A.T + (self.b if self.b is not None else 0.0)
-        # per-(query, probed list) code: the scanner re-binarizes the query
-        # against each list's thresholds (cpp:244-258)
-        flat_lists = order.ravel()
-        qwords = _bits_to_words(
-            self._binarize(np.repeat(Qt, nprobe_, axis=0), flat_lists)
-        )
-        probe_rows = [
-            (
-                int(qids[i]),
-                [int(w) for w in qwords[i * nprobe_ + j]],
-                int(order[i, j]),
-            )
-            for i in range(len(qids))
-            for j in range(nprobe_)
-        ]
-        probes = spark.createDataFrame(
-            probe_rows, "qid bigint, qcode array<bigint>, list_no int"
-        )
-        pruned = self.codes.filter(F.col("list_no").isin(probed))
-        joined = pruned.join(F.broadcast(probes), "list_no").select(
-            "qid",
-            "id",
-            hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            joined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "id", "dist", "rank")
         )
 
 
@@ -3762,71 +3829,12 @@ def sh_search_preassigned(
     qvec_col: str = "vec",
 ) -> DataFrame:
     """Distributed big-batch twin of IVFSpectralHash.search: probe
-    selection AND the per-(query, probed-list) periodic binarization
-    (the scanner.set_list re-binarization, cpp:244-258) run
-    executor-side over broadcast artifacts, emitting the same
-    (qid, qcode, list_no) probe rows the driver path builds — then the
-    identical partition-pruned Hamming join, with the probe side
-    shuffled on list_no instead of broadcast (the query side is huge by
-    assumption)."""
-    from faiss_spark.operators.binary import _bits_to_words, hamming_expr
-
-    if index.codes is None:
-        raise ValueError("index has no codes table; call add() first")
-    spark = queries.sparkSession
-    nprobe_ = min(nprobe, len(index.centroids))
-    shell = IVFSpectralHash(
-        centroids=index.centroids, A=index.A, b=index.b,
-        trained=index.trained, period=index.period,
-        threshold_type=index.threshold_type,
+    assignment runs executor-side and each cogrouped cell re-binarizes
+    its queries against the list's thresholds (SHScorer) — the same
+    scorer the driver plan binds, so results are identical."""
+    return _cogroup_search(
+        index, queries, k, nprobe, qid_col, qvec_col, max_cell_rows=None
     )
-    bc = spark.sparkContext.broadcast(shell)
-
-    def assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        idx = bc.value
-        C = idx.centroids
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = as_matrix(pdf["vec"])
-            CD = (
-                (Q * Q).sum(1)[:, None]
-                + (C * C).sum(1)[None, :]
-                - 2.0 * (Q @ C.T)
-            )
-            order = np.argsort(CD, axis=1, kind="stable")[:, :nprobe_]
-            Qt = Q @ idx.A.T + (idx.b if idx.b is not None else 0.0)
-            qwords = _bits_to_words(
-                idx._binarize(np.repeat(Qt, nprobe_, axis=0), order.ravel())
-            )
-            rep = np.repeat(np.arange(len(Q)), nprobe_)
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy(np.int64)[rep],
-                    "qcode": [
-                        [int(w) for w in row] for row in qwords
-                    ],
-                    "list_no": order.astype(np.int32).ravel(),
-                }
-            )
-
-    q = queries.select(
-        F.col(qid_col).cast("bigint").alias("qid"), F.col(qvec_col).alias("vec")
-    )
-    probes = q.mapInPandas(
-        assign, schema="qid bigint, qcode array<bigint>, list_no int"
-    ).localCheckpoint(eager=False)
-    pruned = index.codes.join(
-        probes.select("list_no").distinct().hint("broadcast"),
-        "list_no",
-        "left_semi",
-    )
-    joined = pruned.join(probes, "list_no").select(
-        "qid",
-        "id",
-        hamming_expr(F.col("code"), F.col("qcode")).cast("double").alias("dist"),
-    )
-    return _window_topk(joined, k, largest=False)
 
 
 @dataclass

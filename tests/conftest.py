@@ -13,8 +13,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
-    s = get_spark("faiss_spark_tests", cpus=cpus)
+    s = get_spark("faiss_spark_tests")
     yield s
 
 

@@ -453,11 +453,9 @@ def test_dedup_against_is_left_anti_on_keys(tables):
 
 def test_ivf_module_has_no_pandas_scan_paths():
     """VERDICT r9 #3 (ROUND9 claim made true): every IVF/PQ list scan and
-    encode path rides the Arrow group helpers. The only permitted
-    mapInPandas call sites in ivf.py are TwoLayerCodes.reconstruct (tiny
-    id-list path) and IVFSpectralHash's word-code paths — the encode and
-    the r13 sh_search_preassigned probe builder (codes are array<bigint>
-    words, not a fixed-width binary matrix)."""
+    encode path rides the Arrow group helpers, the spectral-hash encode
+    and scan included. The only permitted mapInPandas call site in
+    ivf.py is TwoLayerCodes.reconstruct (tiny id-list path)."""
     import inspect
 
     from faiss_spark.operators import ivf as ivfmod
@@ -468,7 +466,7 @@ def test_ivf_module_has_no_pandas_scan_paths():
         for i, ln in enumerate(src)
         if ".mapInPandas(" in ln
     ]
-    assert len(calls) == 3, calls
+    assert len(calls) == 1, calls
 
 
 def test_binary_preassigned_bucketed_codes_skip_shuffle(emb, queries, tmp_path):

@@ -268,6 +268,54 @@ def test_sh_search_preassigned_equals_driver(vectors, queries, monkeypatch):
     assert calls
 
 
+@pytest.mark.parametrize("family", ["ivf", "fastscan", "sh"])
+def test_double_queries_driver_equals_cogroup(vectors, family):
+    """array<double> queries keep their float width in the cogroup probe
+    table: with query values float32 cannot represent, the driver plan
+    and the cogroup twin return the same ids, dist within 1e-9."""
+    import numpy as np
+
+    from faiss_spark.operators.fastscan import (
+        IVFPQFastScanIndex,
+        fastscan_search_preassigned,
+    )
+    from faiss_spark.operators.ivf import (
+        IVFIndex,
+        IVFSpectralHash,
+        sh_search_preassigned,
+    )
+
+    if family == "ivf":
+        idx = IVFIndex.train(vectors, nlist=8, seed=42, niter=5)
+        twin = search_preassigned
+    elif family == "fastscan":
+        idx = IVFPQFastScanIndex.train(vectors, nlist=8, M=8, seed=42, niter=5)
+        twin = fastscan_search_preassigned
+    else:
+        idx = IVFSpectralHash.train(vectors, nlist=8, nbit=32, seed=42, niter=5)
+        twin = sh_search_preassigned
+    idx.add(vectors)
+    rng = np.random.default_rng(0)
+    qrows = []
+    for r in vectors.filter("id < 20").orderBy("id").collect():
+        v = np.asarray(r["vec"], np.float64)
+        qrows.append((r["id"], (v + 1e-4 * rng.standard_normal(len(v))).tolist()))
+    assert any(np.float32(x) != x for _, v in qrows for x in v)
+    qd = vectors.sparkSession.createDataFrame(
+        qrows, "qid bigint, vec array<double>"
+    )
+
+    def full(df):
+        return sorted(
+            (r["qid"], r["rank"], r["id"], r["dist"]) for r in df.collect()
+        )
+
+    drv = full(idx.search(qd, 5, nprobe=3))
+    cog = full(twin(idx, qd, 5, nprobe=3))
+    assert drv and [t[:3] for t in drv] == [t[:3] for t in cog]
+    assert max(abs(a[3] - b[3]) for a, b in zip(drv, cog)) <= 1e-9
+
+
 def test_graph_routed_fallback_equals_driver(vectors, queries, monkeypatch):
     """IVF<n>_NSG<R> (graph-routed coarse): past the bound the factory
     plan routes through search_preassigned with the identical beam walk

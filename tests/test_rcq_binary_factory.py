@@ -174,16 +174,18 @@ def test_search_with_parameters_stats(vectors, queries):
     assert s1.nq == sF.nq == queries.count()
 
 
-@pytest.mark.parametrize("family", ["ivf", "rcq", "sq", "pq"])
+@pytest.mark.parametrize("family", ["ivf", "rcq", "sq", "pq", "fastscan", "sh"])
 def test_search_with_parameters_any_family(vectors, queries, family):
     """search_with_parameters runs each family through its own probe
     function and cell scorer: without a max_codes budget its rows equal
     index.search, and stats.ndis counts one distance per (query, probed
     code), i.e. the summed sizes of every query's probed lists."""
     from faiss_spark.kernels import pairwise_distances
+    from faiss_spark.operators.fastscan import IVFPQFastScanIndex
     from faiss_spark.operators.ivf import (
         IVFIndex,
         IVFPQIndex,
+        IVFSpectralHash,
         IVFSQIndex,
         search_with_parameters,
     )
@@ -194,8 +196,12 @@ def test_search_with_parameters_any_family(vectors, queries, family):
         idx = IVFRCQIndex.train(vectors, M=2, nbits=1, seed=42)
     elif family == "sq":
         idx = IVFSQIndex.train(vectors, nlist=4, seed=42, niter=5)
-    else:
+    elif family == "pq":
         idx = IVFPQIndex.train(vectors, nlist=4, M=8, seed=42, niter=5)
+    elif family == "fastscan":
+        idx = IVFPQFastScanIndex.train(vectors, nlist=4, M=8, seed=42, niter=5)
+    else:
+        idx = IVFSpectralHash.train(vectors, nlist=4, seed=42, niter=5)
     idx.add(vectors)
     idx.codes = idx.codes.localCheckpoint(eager=True)
 
@@ -213,7 +219,8 @@ def test_search_with_parameters_any_family(vectors, queries, family):
     if family == "rcq":
         probes = idx.cq.search_np(Q, 2)[0]
     else:
-        D = pairwise_distances(Q, idx.centroids, "l2")
+        C = idx.base.centroids if family == "fastscan" else idx.centroids
+        D = pairwise_distances(Q, C, "l2")
         probes = np.argsort(D, axis=1, kind="stable")[:, :2]
     sizes = {
         r["list_no"]: r["count"]
