@@ -29,6 +29,12 @@ Metric conventions follow faiss (reference faiss/MetricType.h:23-33):
 
 from __future__ import annotations
 
+import contextlib
+import ctypes
+import functools
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 
 #: metrics where larger values are better (similarities)
@@ -54,6 +60,106 @@ def _wsbuf(name: str, n: int, dtype=np.float64) -> np.ndarray:
         cur = np.empty(n, dtype=dtype)
         _WS[key] = cur
     return cur[:n]
+
+
+# ------------------------------------------------- driver-side thread pool
+#
+# The driver's numpy kernels (k-means on the training sample, PQ codebook
+# training) issue thousands of small GEMMs. Left to OpenBLAS's own pool,
+# its threads busy-wait between calls and burn ~3× the CPU the work
+# needs; the same rule the session applies to every Python worker (one
+# BLAS thread, parallelism from outside) holds on the driver: kernels pin
+# OpenBLAS to one thread and fan independent work out over
+# ``driver_pool_map``. Code that does not run on the pool is never
+# pinned, so an unpooled large GEMM keeps OpenBLAS's threads.
+
+# The thread count is process-wide, so the pin's depth is too: every
+# thread that enters one_blas_thread shares one counter under the lock.
+_PIN_LOCK = threading.Lock()
+_pin_depth = 0
+_pin_saved = 1
+_POOL_LOCAL = threading.local()
+
+
+@functools.lru_cache(maxsize=1)
+def _openblas():
+    """(get, set) thread-count functions of the OpenBLAS numpy loaded,
+    or None when none is found (another BLAS, or no /proc)."""
+    try:
+        with open("/proc/self/maps") as fh:
+            fields = [line.split(None, 5) for line in fh if "openblas" in line]
+        paths = sorted({f[5].strip() for f in fields if len(f) == 6})
+    except OSError:
+        return None
+    for path in paths:
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for suffix in ("", "64_"):
+            get = getattr(lib, "openblas_get_num_threads" + suffix, None)
+            set_ = getattr(lib, "openblas_set_num_threads" + suffix, None)
+            if get is not None and set_ is not None:
+                get.argtypes, get.restype = [], ctypes.c_int
+                set_.argtypes = [ctypes.c_int]
+                set_.restype = None
+                return get, set_
+    return None
+
+
+@contextlib.contextmanager
+def one_blas_thread():
+    """Pin OpenBLAS to one thread for the scope. Re-entrant (also across
+    threads): the outermost entry saves the count and sets 1, the
+    outermost exit restores it, exceptions included. A no-op without an
+    OpenBLAS handle."""
+    global _pin_depth, _pin_saved
+    h = _openblas()
+    if h is None:
+        yield
+        return
+    with _PIN_LOCK:
+        if _pin_depth == 0:
+            _pin_saved = int(h[0]())
+            h[1](1)
+        _pin_depth += 1
+    try:
+        yield
+    finally:
+        with _PIN_LOCK:
+            _pin_depth -= 1
+            if _pin_depth == 0:
+                h[1](_pin_saved)
+
+
+def driver_pool_size() -> int:
+    """Threads ``driver_pool_map`` runs many items on: the session's core
+    count, or 1 (inline) inside a pool thread or without OpenBLAS."""
+    if getattr(_POOL_LOCAL, "inside", False) or _openblas() is None:
+        return 1
+    from faiss_spark.session import default_cpus
+
+    return default_cpus()
+
+
+def _mark_pool_thread() -> None:
+    _POOL_LOCAL.inside = True
+
+
+def driver_pool_map(fn, items) -> list:
+    """``[fn(x) for x in items]`` on ``min(len(items), cores)`` threads,
+    OpenBLAS pinned to one thread meanwhile. With one thread to use (a
+    nested map, no OpenBLAS handle, one item or one core) it runs
+    inline, in order, unpinned. The threads are joined before it
+    returns."""
+    items = list(items)
+    nthreads = min(len(items), driver_pool_size())
+    if nthreads <= 1:
+        return [fn(x) for x in items]
+    with one_blas_thread(), ThreadPoolExecutor(
+        nthreads, initializer=_mark_pool_thread
+    ) as ex:
+        return list(ex.map(fn, items))
 
 
 def as_matrix(col, dtype=np.float64) -> np.ndarray:
@@ -627,8 +733,9 @@ class TopKAccumulator:
         kk = min(self.k, m)
         if m > 2 * kk:
             # The exact per-row kth via introselect is the dominant pass
-            # of the scan at large m (measured ~5× the GEMM per push,
-            # tools/f32_profile.py r11). A SUBSET's kth order statistic
+            # of the scan at large m (measured ~5× the GEMM per push on
+            # the f32 scan; A/B it end to end with ``tools/ab.py --base
+            # <sha> graph_bucketed``). A SUBSET's kth order statistic
             # is ≥ the full row's kth, so the kth of every 16th column
             # is a valid loose threshold: masking ≤ t̂ keeps a SUPERSET
             # of the exact ≤-kth set (ties at the true kth included),

@@ -12,7 +12,11 @@ full dataset. We keep exactly that split:
            the driver (bounded: k=65536, mpc=256, d=64 ≈ 4 GB worst case;
            typical ≤ 100 MB) and Lloyd's runs in numpy — deterministic,
            byte-stable across partitionings (the hard problem in SURVEY §7
-           "what's hard (b)").
+           "what's hard (b)"). Each iteration's assignment runs in row
+           blocks striped over ``kernels.driver_pool_map``: one thread
+           per core, OpenBLAS pinned to one thread meanwhile (its own
+           pool spins between the loop's GEMMs and tripled the fit's
+           CPU), the blocks' buffers reused across iterations.
   assign : one distributed pass — broadcast centroids, argmin via GEMM in
            mapInPandas. This is the step that scales to 100 TB, and it is
            embarrassingly parallel (no shuffle).
@@ -34,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from faiss_spark.kernels import as_matrix
+from faiss_spark.kernels import as_matrix, driver_pool_map, driver_pool_size
 
 
 EPS_SPLIT = 1.0 / 1024.0  # same perturbation faiss uses (Clustering.cpp:249)
@@ -58,6 +62,77 @@ def _scatter_sum(
     return sums
 
 
+#: total rows of (rows, k) assignment workspace one fit holds: a single
+#: 16384-row block, split evenly over the driver pool's stripes
+_ASSIGN_ROWS = 16384
+#: smallest row block worth a pool thread
+_MIN_BLOCK_ROWS = 256
+
+
+class _NearestCentroid:
+    """Row-blocked nearest-centroid step shared by ``_lloyd`` and
+    ``codecs._kmeans_np``: per block ``G = X·Cᵀ`` into a reused buffer,
+    then ``cn − 2·G`` in place and argmin (argmax of ``G`` when
+    spherical). Returns (labels, the ranked value at each label:
+    ``cn − 2·x·c``, or ``x·c`` when spherical).
+
+    The row blocks are striped over ``kernels.driver_pool_map`` (OpenBLAS
+    pinned to one thread); each stripe owns one buffer, and the stripes
+    together hold one ``_ASSIGN_ROWS``-row block. Neither the blocking
+    nor the thread count changes any per-element dot product, and
+    ``cn − 2·G`` via in-place ×2 and subtract is the same value graph as
+    the one-shot ``cn − 2.0·(X @ C.T)`` (2.0·G is exact), so labels and
+    values are bit-identical to the unblocked form. The buffers are
+    REUSED across iterations: the (block, k) temporaries are ~134 MB at
+    k=1024, and freshly allocated they are mmap'd and first-touch page
+    faults cost multiples of the GEMM on this class of VM (measured 7×
+    on the 65k×1024×64 fit loop); memory stays O(block × k) where the
+    full n×k matrix is 2 GB at n=262k, k=1024."""
+
+    def __init__(self, X: np.ndarray, k: int, spherical: bool = False):
+        n, d = X.shape
+        self.X = X
+        self.spherical = spherical
+        if k == 1:
+            # one centroid makes the product a GEMV, whose rounding
+            # depends on a row's place in its block: keep the unpooled
+            # layout of fixed 16384-row blocks
+            self.nstripes, rows = 1, max(1, min(n, _ASSIGN_ROWS))
+            self.bounds = list(range(0, n, rows)) + [n]
+        else:
+            self.nstripes = max(1, min(driver_pool_size(), n // _MIN_BLOCK_ROWS))
+            rows = max(1, -(-min(n, _ASSIGN_ROWS) // self.nstripes))
+            nblocks = max(1, -(-n // rows))
+            # equal splits: no block is much shorter than ``rows`` (a
+            # 1-row block would turn the GEMM into a GEMV)
+            self.bounds = [n * i // nblocks for i in range(nblocks + 1)]
+        self.G = [np.empty((rows, k), X.dtype) for _ in range(self.nstripes)]
+        self.Ct = np.empty((d, k), X.dtype)
+        self.labels = np.empty(n, np.int64)
+        self.best = np.empty(n, X.dtype)
+
+    def __call__(self, C: np.ndarray) -> tuple:
+        self.cn = None if self.spherical else (C * C).sum(1)
+        np.copyto(self.Ct, C.T)
+        driver_pool_map(self._stripe, range(self.nstripes))
+        return self.labels, self.best
+
+    def _stripe(self, s: int) -> None:
+        bounds = self.bounds
+        for b in range(s, len(bounds) - 1, self.nstripes):
+            lo, hi = bounds[b], bounds[b + 1]
+            G = self.G[s][: hi - lo]
+            np.dot(self.X[lo:hi], self.Ct, out=G)
+            if self.spherical:
+                lb = np.argmax(G, axis=1)
+            else:
+                G *= 2.0
+                np.subtract(self.cn[None, :], G, out=G)
+                lb = np.argmin(G, axis=1)
+            self.labels[lo:hi] = lb
+            self.best[lo:hi] = G[np.arange(hi - lo), lb]
+
+
 def _lloyd(
     X: np.ndarray,
     k: int,
@@ -78,44 +153,14 @@ def _lloyd(
     w = weights if weights is not None else np.ones(n, dtype=np.float64)
     obj_history = []
     xsq = (X * X).sum(1)
-    # REUSED iteration buffers: the assign loop's (block, k) temporaries
-    # are ~134 MB at k=1024 — freshly allocated each block they are
-    # mmap'd and first-touch page faults cost multiples of the GEMM on
-    # this class of VM (the same pathology the session pins down for
-    # workers via MALLOC_MMAP_THRESHOLD_, which does not cover the
-    # driver). Reuse measured 7× on the 65k×1024×64 fit loop with
-    # BIT-IDENTICAL centroids/labels (cn − 2·G via in-place *2 and
-    # subtract is the same value graph; 2.0·G is exact).
-    B = 16384
-    Gbuf = np.empty((min(B, n), k), dtype=np.float64)
-    Ct = np.empty((d, k), dtype=np.float64)
+    nearest = _NearestCentroid(X, k, spherical)
     for _ in range(niter):
-        # assign: argmin squared L2 (or argmax IP when spherical) —
-        # BLOCK-WISE so memory stays O(block × k): at n=262k, k=1024 the
-        # full n×k double matrix is 2 GB and its broadcast temporaries
-        # dominated the fit wall-clock
-        labels = np.empty(n, dtype=np.int64)
-        best = np.empty(n, dtype=np.float64)
-        cn = (C * C).sum(1)
-        np.copyto(Ct, C.T)
-        for lo in range(0, n, B):
-            hi = min(lo + B, n)
-            G = Gbuf[: hi - lo]
-            np.dot(X[lo:hi], Ct, out=G)
-            if spherical:
-                lb = np.argmax(G, axis=1)
-                labels[lo:hi] = lb
-                best[lo:hi] = G[np.arange(hi - lo), lb]
-            else:
-                G *= 2.0
-                np.subtract(cn[None, :], G, out=G)
-                lb = np.argmin(G, axis=1)
-                labels[lo:hi] = lb
-                best[lo:hi] = G[np.arange(hi - lo), lb] + xsq[lo:hi]
+        # assign: argmin squared L2 (or argmax IP when spherical)
+        labels, best = nearest(C)
         if spherical:
             obj = float((w * best).sum())
         else:
-            obj = float((w * np.maximum(best, 0.0)).sum())
+            obj = float((w * np.maximum(best + xsq, 0.0)).sum())
         obj_history.append(obj)
         # update (bincount scatter — bit-identical to add.at, ~15× faster)
         sums = _scatter_sum(labels, X * w[:, None], k)

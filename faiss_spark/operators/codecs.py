@@ -29,31 +29,70 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from faiss_spark.kernels import TopKAccumulator, as_matrix
+from faiss_spark.kernels import TopKAccumulator, as_matrix, driver_pool_map
+from faiss_spark.operators.cluster import _NearestCentroid, _scatter_sum
 
 
 def _kmeans_np(X: np.ndarray, k: int, niter: int, seed: int) -> tuple:
     """Small deterministic Lloyd's for codebook training (driver-side,
     used for PQ sub-spaces and OPQ; same role as Clustering with
-    a temp IndexFlat in the reference)."""
+    a temp IndexFlat in the reference). Returns (centroids, labels of
+    the last assignment)."""
     rng = np.random.default_rng(seed)
     k = min(k, len(X))
     C = X[rng.permutation(len(X))[:k]].copy()
     labels = None
+    # argmin needs only ||c||² − 2x·c (||x||² is constant per row)
+    nearest = _NearestCentroid(X, k)
     for _ in range(niter):
-        # argmin needs only ||c||² − 2x·c (||x||² is constant per row);
-        # GEMM form instead of an n×k×d broadcast temp
-        d2 = (C * C).sum(1)[None, :] - 2.0 * (X @ C.T)
-        labels = d2.argmin(1)
+        labels, _ = nearest(C)
         # bincount scatter update (cluster._scatter_sum: bit-identical
         # to add.at — same per-bin accumulation order — ~15× faster)
-        from faiss_spark.operators.cluster import _scatter_sum
-
         sums = _scatter_sum(labels, X, len(C)).astype(C.dtype, copy=False)
         counts = np.bincount(labels, minlength=k)
         nz = counts > 0
         C[nz] = sums[nz] / counts[nz, None]
     return C, labels
+
+
+def train_subquantizers(
+    X: np.ndarray, M: int, ksub: int, niter: int, seed: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The M independent sub-space k-means of a product quantizer
+    (reference ProductQuantizer::train): ``_kmeans_np`` on each of the M
+    column slices of X, seeded ``seed + m``, mapped over the driver pool.
+    Returns (books (M, min(ksub, n), d/M) float64, codes (n, M) int64),
+    codes being each sub-space's last assignment as ``_kmeans_np``
+    returns it."""
+    n, d = X.shape
+    dsub = d // M
+
+    def fit(m: int) -> tuple:
+        sub = np.ascontiguousarray(X[:, m * dsub : (m + 1) * dsub])
+        return _kmeans_np(sub, ksub, niter, seed + m)
+
+    books = np.empty((M, min(ksub, n), dsub), np.float64)
+    codes = np.empty((n, M), np.int64)
+    for m, (C, labels) in enumerate(driver_pool_map(fit, range(M))):
+        books[m], codes[:, m] = C, labels
+    return books, codes
+
+
+def train_residual_stages(
+    X: np.ndarray, ksubs: list, niter: int, seed: int
+) -> list[np.ndarray]:
+    """Greedy residual k-means (reference ResidualQuantizer::train at
+    beam 1): stage m fits ``_kmeans_np`` with ``ksubs[m]`` centroids,
+    seeded ``seed + m``, on the residual the stages before it leave.
+    The stages depend on each other, so they run in order; each one's
+    assignment still runs on the driver pool. Returns the M codebooks
+    (min(ksubs[m], n), d)."""
+    books, resid = [], X.copy()
+    for m, ksub in enumerate(ksubs):
+        C, labels = _kmeans_np(resid, ksub, niter, seed + m)
+        books.append(C)
+        resid = resid - C[labels]
+    return books
 
 
 def _sampled_matrix(df: DataFrame, vec_col: str, max_train: int, seed: int):
@@ -787,14 +826,7 @@ class ProductQuantizer:
         d = X.shape[1]
         if d % self.M:
             raise ValueError(f"d={d} not divisible by M={self.M}")
-        dsub = d // self.M
-        ksub = min(self.ksub, len(X))
-        books = np.empty((self.M, ksub, dsub), np.float64)
-        for m in range(self.M):
-            C, _ = _kmeans_np(
-                X[:, m * dsub : (m + 1) * dsub], ksub, self.niter, self.seed + m
-            )
-            books[m] = C
+        books, _ = train_subquantizers(X, self.M, self.ksub, self.niter, self.seed)
         return ProductQuantizerModel(codebooks=books)
 
 
@@ -978,13 +1010,9 @@ class ResidualQuantizer:
     def fit(self, df: DataFrame, vec_col: str = "vec") -> ResidualQuantizerModel:
         X = _sampled_matrix(df, vec_col, self.max_train_points, self.seed)
         d = X.shape[1]
-        books = []
-        resid = X.copy()
-        for m in range(self.M):
-            ksub = min(1 << self.nbits[m], len(X))
-            C, labels = _kmeans_np(resid, ksub, self.niter, self.seed + m)
-            books.append(C)
-            resid = resid - C[labels]
+        books = train_residual_stages(
+            X, [1 << b for b in self.nbits], self.niter, self.seed
+        )
         return ResidualQuantizerModel(
             codebooks=_padded_books(books, d), beam=self.beam
         )
@@ -1392,12 +1420,9 @@ class LocalSearchQuantizer:
         IndexIVFAdditiveQuantizer::train_residual)."""
         ksub = min(self.ksub, len(X))
         # init codebooks like RQ
-        books = np.empty((self.M, ksub, X.shape[1]), np.float64)
-        resid = X.copy()
-        for m in range(self.M):
-            C, labels = _kmeans_np(resid, ksub, self.niter_init, self.seed + m)
-            books[m] = C
-            resid = resid - C[labels]
+        books = np.stack(
+            train_residual_stages(X, [ksub] * self.M, self.niter_init, self.seed)
+        )
         model = LocalSearchQuantizerModel(codebooks=books, icm_iters=self.icm_iters)
         for _ in range(self.train_iters):
             codes = model.encode_np(X)

@@ -51,9 +51,10 @@ from faiss_spark.operators.codecs import (
     ProductQuantizerModel,
     ResidualQuantizer,
     ResidualQuantizerModel,
-    _kmeans_np,
     _map_codec,
     _sampled_matrix,
+    train_residual_stages,
+    train_subquantizers,
 )
 from faiss_spark.operators.ivf import (
     _CAND_SCHEMA,
@@ -264,13 +265,7 @@ class IVFPQFastScanIndex:
         d = X.shape[1]
         if d % M:
             raise ValueError(f"d={d} not divisible by M={M}")
-        dsub = d // M
-        ksub = min(16, len(X))
-        books = np.empty((M, ksub, dsub), np.float64)
-        for m in range(M):
-            books[m], _ = _kmeans_np(
-                X[:, m * dsub : (m + 1) * dsub], ksub, pq_niter, seed + m
-            )
+        books, _ = train_subquantizers(X, M, 16, pq_niter, seed)
         base = IVFPQIndex(
             centroids=km.centroids, pq=ProductQuantizerModel(codebooks=books)
         )
@@ -571,9 +566,7 @@ def _norm_decode(codes: np.ndarray, M: int, norm_books: np.ndarray) -> np.ndarra
 def _fit_norm_books(norms: np.ndarray, ksub: int, seed: int) -> np.ndarray:
     """Train the (2, ksub) scalar-norm codebooks (2-level residual
     k-means on the 1-D norm values)."""
-    nb0, lab0 = _kmeans_np(norms[:, None], min(ksub, len(norms)), 10, seed)
-    resid = norms - nb0[lab0, 0]
-    nb1, _ = _kmeans_np(resid[:, None], min(ksub, len(resid)), 10, seed + 1)
+    nb0, nb1 = train_residual_stages(norms[:, None], [ksub, ksub], 10, seed)
     # pad short codebooks (tiny train sets) with the LAST real centroid:
     # a 0.0 pad would act as a spurious centroid in _norm_encode's argmin
     # and inflate the norm span in _estimate_norm_scale
@@ -818,11 +811,7 @@ class IVFAQFastScanIndex:
         lists = d2.argmin(1)
         resid = X - C[lists]
         ksub = min(16, len(resid))
-        books = np.empty((M, ksub, X.shape[1]), np.float64)
-        r = resid.copy()
-        for m in range(M):
-            books[m], labels = _kmeans_np(r, ksub, rq_niter, seed + m)
-            r = r - books[m][labels]
+        books = np.stack(train_residual_stages(resid, [ksub] * M, rq_niter, seed))
         rq = ResidualQuantizerModel(codebooks=books, beam=4)
         # norm quantizer over FULL reconstructed norms ‖c + r̂‖²
         xhat = C[lists] + rq.decode_np(rq.encode_np(resid))

@@ -1284,7 +1284,7 @@ class NestedCoarseRouter:
     def build(
         sub: tuple, centroids: np.ndarray, seed: int = 1234
     ) -> "NestedCoarseRouter":
-        from faiss_spark.operators.codecs import _kmeans_np
+        from faiss_spark.operators.codecs import _kmeans_np, train_subquantizers
 
         C = np.ascontiguousarray(centroids, np.float64)
         nlist, d = C.shape
@@ -1295,14 +1295,7 @@ class NestedCoarseRouter:
             _, M, nbits = sub
             if d % M:
                 raise ValueError(f"d={d} not divisible by sub-index PQ M={M}")
-            dsub = d // M
-            ksub = min(1 << nbits, len(C))
-            books = np.empty((M, ksub, dsub), np.float64)
-            codes = np.empty((len(C), M), np.int64)
-            for m in range(M):
-                books[m], codes[:, m] = _kmeans_np(
-                    C[:, m * dsub : (m + 1) * dsub], ksub, 15, seed + m
-                )
+            books, codes = train_subquantizers(C, M, 1 << nbits, 15, seed)
             # the raw centroid table is deliberately NOT retained (see
             # field comment): assignment is pure ADC over books + codes
             return NestedCoarseRouter(
@@ -1472,7 +1465,7 @@ class CompositeCoarseRouter:
         """Train one codec stage on the centroid table → field dict."""
         from faiss_spark.operators.codecs import (
             ScalarQuantizerModel,
-            _kmeans_np,
+            train_subquantizers,
         )
 
         if kind[0] == "flat":
@@ -1488,14 +1481,7 @@ class CompositeCoarseRouter:
                 raise ValueError(
                     f"d={C.shape[1]} not divisible by sub-index PQ M={M}"
                 )
-            dsub = C.shape[1] // M
-            ksub = min(1 << nbits, len(C))
-            books = np.empty((M, ksub, dsub), np.float64)
-            codes = np.empty((len(C), M), np.int64)
-            for m_ in range(M):
-                books[m_], codes[:, m_] = _kmeans_np(
-                    C[:, m_ * dsub : (m_ + 1) * dsub], ksub, 15, seed + m_
-                )
+            books, codes = train_subquantizers(C, M, 1 << nbits, 15, seed)
             return {"books": books, "codes": codes}
         raise ValueError(f"unknown composite codec {kind!r}")
 
@@ -1944,18 +1930,12 @@ class IVFPQIndex:
         )
         resid = X - C[d2.argmin(1)]
         # train PQ codebooks on the residual sample (driver-side numpy)
-        from faiss_spark.operators.codecs import _kmeans_np
+        from faiss_spark.operators.codecs import train_subquantizers
 
         d = X.shape[1]
         if d % M:
             raise ValueError(f"d={d} not divisible by M={M}")
-        dsub = d // M
-        ksub = min(1 << nbits, len(resid))
-        books = np.empty((M, ksub, dsub), np.float64)
-        for m in range(M):
-            books[m], _ = _kmeans_np(
-                resid[:, m * dsub : (m + 1) * dsub], ksub, pq_niter, seed + m
-            )
+        books, _ = train_subquantizers(resid, M, 1 << nbits, pq_niter, seed)
         return IVFPQIndex(centroids=C, pq=ProductQuantizerModel(codebooks=books))
 
     def add(
@@ -3134,7 +3114,7 @@ class IMIPQIndex:
         pq_niter: int = 15,
         pq_nbits: int = 8,
     ) -> "IMIPQIndex":
-        from faiss_spark.operators.codecs import _kmeans_np, _sampled_matrix
+        from faiss_spark.operators.codecs import _sampled_matrix, train_subquantizers
 
         sub = train_imi(vectors, 1 << nbits, vec_col=vec_col, seed=seed, niter=niter)
         idx = IMIPQIndex(sub_centroids=sub, pq=None)  # books next
@@ -3151,13 +3131,7 @@ class IMIPQIndex:
             d2 = (s * s).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (s @ C.T)
             cells = cells * idx.ksub + d2.argmin(1)
         resid = X - idx._cell_centroids(cells)
-        dsub = d // M
-        ksub_pq = min(1 << pq_nbits, len(resid))
-        books = np.empty((M, ksub_pq, dsub), np.float64)
-        for m in range(M):
-            books[m], _ = _kmeans_np(
-                resid[:, m * dsub : (m + 1) * dsub], ksub_pq, pq_niter, seed + m
-            )
+        books, _ = train_subquantizers(resid, M, 1 << pq_nbits, pq_niter, seed)
         idx.pq = ProductQuantizerModel(codebooks=books)
         return idx
 
@@ -3315,18 +3289,13 @@ def train_imi(
     """Train the two half-space codebooks of an IMI2x coarse quantizer:
     independent k-means per dimension half (reference MultiIndexQuantizer
     training). Returns (2, k, d/2)."""
-    from faiss_spark.operators.codecs import _kmeans_np, _sampled_matrix
+    from faiss_spark.operators.codecs import _sampled_matrix, train_subquantizers
 
     X = _sampled_matrix(vectors, vec_col, 65536, seed)
     d = X.shape[1]
     if d % 2:
         raise ValueError(f"IMI needs even d, got {d}")
-    dsub = d // 2
-    out = np.empty((2, min(k, len(X)), dsub), np.float64)
-    for h in range(2):
-        C, _ = _kmeans_np(X[:, h * dsub : (h + 1) * dsub], k, niter, seed + h)
-        out[h] = C
-    return out
+    return train_subquantizers(X, 2, k, niter, seed)[0]
 
 
 @dataclass
@@ -3381,7 +3350,7 @@ class IVFPQRIndex:
             base.add(vectors, id_col=id_col, vec_col=vec_col)
             return IVFPQRIndex(ivfpq=base, vectors=vectors, k_factor=k_factor)
 
-        from faiss_spark.operators.codecs import _kmeans_np, _sampled_matrix
+        from faiss_spark.operators.codecs import _sampled_matrix, train_subquantizers
 
         # refine PQ trained on 2nd-level residuals of a seeded sample
         # (reference IndexIVFPQR.cpp:50-66 train_residual)
@@ -3394,13 +3363,9 @@ class IVFPQRIndex:
         lists = d2.argmin(1)
         r1 = X - C[lists]
         r2 = r1 - base.pq.decode_np(base.pq.encode_np(r1))
-        dsub = d // M_refine
-        ksub = min(1 << nbits_refine, len(r2))
-        books = np.empty((M_refine, ksub, dsub), np.float64)
-        for m in range(M_refine):
-            books[m], _ = _kmeans_np(
-                r2[:, m * dsub : (m + 1) * dsub], ksub, pq_niter, seed + 101 + m
-            )
+        books, _ = train_subquantizers(
+            r2, M_refine, 1 << nbits_refine, pq_niter, seed + 101
+        )
         idx = IVFPQRIndex(
             ivfpq=base, vectors=vectors, k_factor=k_factor,
             refine_pq=ProductQuantizerModel(codebooks=books),
@@ -3917,10 +3882,10 @@ class IVFAQIndex:
             AQNormQuantizer,
             LocalSearchQuantizer,
             ResidualQuantizerModel,
-            _kmeans_np,
             _normalize_nbits,
             _padded_books,
             _sampled_matrix,
+            train_residual_stages,
         )
 
         if coarse_q is not None:
@@ -3957,13 +3922,9 @@ class IVFAQIndex:
                 M=M, nbits=bits[0], niter_init=rq_niter, seed=seed
             ).fit_np(resid)
         else:
-            books = []
-            r = resid.copy()
-            for m in range(M):
-                ksub = min(1 << bits[m], len(resid))
-                Cb, labels = _kmeans_np(r, ksub, rq_niter, seed + m)
-                books.append(Cb)
-                r = r - Cb[labels]
+            books = train_residual_stages(
+                resid, [1 << b for b in bits], rq_niter, seed
+            )
             codec = ResidualQuantizerModel(
                 codebooks=_padded_books(books, X.shape[1]), beam=beam
             )

@@ -632,7 +632,12 @@ class NSGIndex:
         100 TB serving shape. Routed searches' ``isin(probed)`` filter
         additionally bucket-prunes the scan when nbuckets == nshards
         (the default): low-nprobe serving reads only the probed shards'
-        files."""
+        files.
+
+        Contract: ``nbuckets`` ≥ the cores expected at search time. The
+        scan runs ONE task per bucket, so fewer buckets than cores
+        leaves cores idle for every search; the default, ``nshards``,
+        meets it only when the index has at least that many shards."""
         import hashlib as _hashlib
         import os as _os
 

@@ -253,7 +253,7 @@ class OPQMatrix:
         # _sampled_matrix collects the seeded train sample via Arrow
         # (guide §6 "Arrow for driver transfers") — same sampling logic,
         # bit-identical matrix, no per-row pandas objects
-        from faiss_spark.operators.codecs import _kmeans_np, _sampled_matrix
+        from faiss_spark.operators.codecs import _sampled_matrix, train_subquantizers
 
         X = _sampled_matrix(df, vec_col, self.max_train_points, self.seed)
         d = X.shape[1]
@@ -265,12 +265,12 @@ class OPQMatrix:
         for _ in range(self.niter):
             XR = X @ R.T
             # train / assign per sub-space, rebuild quantized Y
+            books, _ = train_subquantizers(XR, self.M, ksub, 4, self.seed)
             Y = np.empty_like(XR)
             for m in range(self.M):
                 sub = XR[:, m * dsub : (m + 1) * dsub]
-                C, _ = _kmeans_np(sub, ksub, niter=4, seed=self.seed + m)
-                lab = _assign_exact_blocked(sub, C)
-                Y[:, m * dsub : (m + 1) * dsub] = C[lab]
+                lab = _assign_exact_blocked(sub, books[m])
+                Y[:, m * dsub : (m + 1) * dsub] = books[m][lab]
             # procrustes: R = argmin ||X Rᵀ − Y||  →  SVD(Xᵀ Y)
             U, _, Vt = np.linalg.svd(X.T @ Y, full_matrices=False)
             R = (U @ Vt).T

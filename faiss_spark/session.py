@@ -97,7 +97,11 @@ def get_spark(app_name: str = "faiss_spark", cpus: int | None = None) -> SparkSe
         # pools (each defaulting to all cores) oversubscribe the host
         # N×-fold and thrash the GEMM hot path — the standard Spark+numpy
         # discipline is one BLAS thread per core-pinned worker, with
-        # parallelism coming from Spark's partitioning
+        # parallelism coming from Spark's partitioning. The driver keeps
+        # the same rule: its numpy kernels (k-means, PQ training) run
+        # under kernels.one_blas_thread on kernels.driver_pool_map,
+        # never on OpenBLAS's own pool, whose threads spin between the
+        # small GEMMs of a Lloyd loop
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
